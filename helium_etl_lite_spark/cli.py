@@ -296,10 +296,11 @@ def cmd_status(cfg, log=None) -> dict:
         # Mirror CursorStore.read() (etl/pipeline.py): during the
         # two-rename cursor swap (or after a crash between renames) the
         # live cursor sits in follower_info.old — falling back there
-        # keeps status truthful instead of reporting null (r7 ADVICE).
+        # keeps status truthful instead of reporting null; missing
+        # both means a whole swap completed, so retry current.
         status["height"] = None
         status["first_block"] = None
-        for d in (cursor_dir, cursor_dir + ".old"):
+        for d in (cursor_dir, cursor_dir + ".old", cursor_dir):
             try:
                 t = pq.read_table(d)
             except (FileNotFoundError, OSError):

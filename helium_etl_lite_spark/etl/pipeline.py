@@ -183,8 +183,11 @@ class CursorStore:
     written to a `.tmp` directory and published with two renames
     (current → `.old`, `.tmp` → current); at every instant at least one
     of current/.old holds a complete previous cursor, and read() falls
-    back to `.old` for the microsecond rename window. (On an object
-    store, swap this for a conditional-put of a single manifest file.)
+    back to `.old` for the microsecond rename window. A reader that
+    misses both has raced a whole swap (.tmp promoted, .old deleted
+    between its two reads), so it reads current once more rather than
+    report no cursor. (On an object store, swap this for a
+    conditional-put of a single manifest file.)
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -201,10 +204,11 @@ class CursorStore:
         return rows[0]["height"], rows[0]["first_block"]
 
     def read(self) -> tuple[int, int] | None:
-        got = self._read_dir(self.path)
-        if got is not None:
-            return got
-        return self._read_dir(self.path + ".old")
+        for path in (self.path, self.path + ".old", self.path):
+            got = self._read_dir(path)
+            if got is not None:
+                return got
+        return None
 
     def write(self, height: int, first_block: int) -> None:
         import shutil

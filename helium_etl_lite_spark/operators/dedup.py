@@ -17,6 +17,9 @@ bit_count) — no Python UDFs anywhere.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from typing import Callable
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -82,14 +85,92 @@ def _perm_min(base_hashes, p: int):
     )
 
 
+def _md5_32(col):
+    """First 8 md5 hex chars as a BIGINT — the engine-portable token
+    hash (DuckDB: CAST(('0x'||substr(md5(x),1,8)) AS BIGINT))."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+
+
+@dataclass(frozen=True)
+class MinHashFamily:
+    """The three hash expressions a MinHash pipeline depends on; the
+    dataflow around them (signatures -> band rows -> bucket screen ->
+    exact verify) is shared by both families.
+
+    - token_hash: string token -> BIGINT, reduced mod 2^31-1 for the
+      signature and used as-is for the verify sets;
+    - bucket: a band's signature slice -> BIGINT bucket key;
+    - distinct_verify: array_distinct the hashed verify set, so a hash
+      collision between two distinct tokens collapses identically on
+      every engine;
+    - rows_per_band: the band width the bucket encoding requires
+      (None: any).
+    """
+
+    name: str
+    token_hash: Callable
+    bucket: Callable
+    distinct_verify: bool
+    rows_per_band: int | None
+    cap_warning: str
+
+    def check(self, num_perm: int, bands: int) -> None:
+        if self.rows_per_band is not None and num_perm // bands != self.rows_per_band:
+            raise ValueError(
+                f"{self.name} bucket encoding requires rows_per_band == "
+                f"{self.rows_per_band} (num_perm={num_perm}, bands={bands})"
+            )
+
+    def verify_set(self, text_col: str):
+        hashed = F.transform(_token_set(text_col), lambda t: self.token_hash(t))
+        return F.array_distinct(hashed) if self.distinct_verify else hashed
+
+
+# Production: xxhash64 everywhere (measurably cheaper). Signatures and
+# band rows persisted by minhash_state_add are this family's (SIG_VERSION).
+NATIVE_MINHASH = MinHashFamily(
+    name="native",
+    token_hash=F.xxhash64,
+    bucket=lambda cols: F.xxhash64(*cols),
+    distinct_verify=False,
+    rows_per_band=None,
+    cap_warning=(
+        "containment screen: {n_over} bucket(s) over cap={cap}; routed "
+        "through bucket-min representative (~{dropped} member-member "
+        "candidate pairs dropped — raise bucket_cap to widen, or rely on "
+        "the assign path for keeper semantics)"
+    ),
+)
+# Engine-portable: every hash has a bit-identical SQL restatement, so the
+# WHOLE pipeline — signatures, bucket collisions, keeper choice, verify —
+# hash-matches a generated DuckDB oracle (portable_minhash_oracle_sql,
+# portable_screened_oracle_sql). md5-prefix token hashes replace
+# xxhash64; the band bucket is the polynomial sig[2b]*M + sig[2b+1],
+# injective because sig values are < M = 2^31-1 (fits a BIGINT), so
+# collisions are EXACTLY signature-slice equality.
+PORTABLE_MINHASH = MinHashFamily(
+    name="portable",
+    token_hash=_md5_32,
+    bucket=lambda cols: cols[0] * F.lit(_MERSENNE) + cols[1],
+    distinct_verify=True,
+    rows_per_band=2,
+    cap_warning=(
+        "portable containment screen: {n_over} bucket(s) over cap={cap}; "
+        "routed through bucket-min representative (~{dropped} "
+        "member-member candidate pairs dropped)"
+    ),
+)
+
+
 def minhash_signatures(
-    docs: DataFrame, num_perm: int = 16, text_col: str = "text", id_col: str = "doc_id"
+    docs: DataFrame, num_perm: int = 16, text_col: str = "text", id_col: str = "doc_id",
+    family: MinHashFamily = NATIVE_MINHASH,
 ) -> DataFrame:
     """MinHash over the distinct-token set, computed ROW-LOCAL with
     array higher-order functions: each token is hashed once
-    (xxhash64 mod 2^31-1), permutation p maps that base hash through a
-    universal-hash multiply-add-mod, and signature element p is the
-    array_min. No explode, no groupBy — the token stream never
+    (family.token_hash mod 2^31-1), permutation p maps that base hash
+    through a universal-hash multiply-add-mod, and signature element p
+    is the array_min. No explode, no groupBy — the token stream never
     shuffles (the former explode+agg form shuffled every token in the
     corpus; at 100 TB that shuffle dwarfs everything downstream). One
     whole-stage-codegen projection.
@@ -112,7 +193,7 @@ def minhash_signatures(
             f"permutation constants), got {num_perm}"
         )
     toks = _token_set(text_col)
-    base = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE)))
+    base = F.transform(toks, lambda t: F.pmod(family.token_hash(t), F.lit(_MERSENNE)))
     d = docs.where(toks.isNotNull() & (F.size(toks) > 0)).select(
         F.col(id_col), base.alias("__bh")
     )
@@ -122,12 +203,13 @@ def minhash_signatures(
 
 def _band_rows(
     sig: DataFrame, num_perm: int, bands: int, id_col: str = "doc_id",
-    keep_sig: bool = False,
+    keep_sig: bool = False, family: MinHashFamily = NATIVE_MINHASH,
 ) -> DataFrame:
     """Explode a signature table into LSH band rows
-    (id, band, bucket[, sig]): bucket = hash of the band's signature
-    slice. One row per doc per band; the only downstream join key is
-    (band, bucket) — hash-partitioned, never a cross product."""
+    (id, band, bucket[, sig]): bucket = family.bucket of the band's
+    signature slice. One row per doc per band; the only downstream join
+    key is (band, bucket) — hash-partitioned, never a cross product."""
+    family.check(num_perm, bands)
     rows_per_band = num_perm // bands
     extra = [F.col("sig")] if keep_sig else []
     return sig.select(
@@ -138,8 +220,8 @@ def _band_rows(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig").getItem(b * rows_per_band + r) for r in range(rows_per_band)]
+                        family.bucket(
+                            [F.col("sig").getItem(b * rows_per_band + r) for r in range(rows_per_band)]
                         ).alias("bucket"),
                     )
                     for b in range(bands)
@@ -200,6 +282,7 @@ def containment_screened_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     bucket_cap: int = 256,
+    family: MinHashFamily = NATIVE_MINHASH,
 ) -> DataFrame:
     """The production near-dup path in ONE plan: MinHash band SCREEN →
     exact containment VERIFY. At 100 TB nobody runs the exact O(N²)
@@ -225,10 +308,15 @@ def containment_screened_pairs(
 
     Directed pairs (doc_src, doc_sup): ≥ `containment_threshold` of
     doc_src's distinct tokens appear in doc_sup, computed EXACTLY over
-    xxhash64'd token sets (8-byte longs, same result modulo a 2^-64
+    family-hashed token sets (8-byte longs, same result modulo a hash
     collision — the minhash_dedup_assign argument). Both directions are
     emitted, because containment is asymmetric while the screen is
     symmetric.
+
+    The bucket-size cap stays under PORTABLE_MINHASH: which buckets
+    exceed it, and the member<->min-id pairs they route into, are pure
+    functions of the data, so the capped candidate set is as
+    oracle-checkable (portable_screened_oracle_sql) as the uncapped one.
 
     Recall contract: the screen is tuned for JACCARD (bands=8 over 16
     perms → P(candidate) ≈ 1-(1-j²)^8), so high-containment pairs with
@@ -250,7 +338,7 @@ def containment_screened_pairs(
     banding earns its complexity only when the size histogram is
     long-tailed; register it with a corpus that has one.
     """
-    sig = minhash_signatures(docs, num_perm, text_col, id_col)
+    sig = minhash_signatures(docs, num_perm, text_col, id_col, family)
     # Materialized ONCE (eager localCheckpoint) because the stats
     # action below executes this pipeline and the returned plan reads
     # it twice more (tagged + sizes) — without it the corpus-wide
@@ -261,7 +349,9 @@ def containment_screened_pairs(
     # band_rows is ~`bands` 24-byte rows per doc. eager=False (r14):
     # the unconditional stats action below materializes the checkpoint
     # anyway — one job instead of two.
-    band_rows = _band_rows(sig, num_perm, bands, id_col).localCheckpoint(eager=False)
+    band_rows = _band_rows(
+        sig, num_perm, bands, id_col, family=family
+    ).localCheckpoint(eager=False)
     sizes = band_rows.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("__bsz"), F.min(id_col).alias("__bmin")
     )
@@ -283,11 +373,10 @@ def containment_screened_pairs(
         import logging
 
         logging.getLogger("helium_etl_lite_spark").warning(
-            f"containment screen: {stats['n_over']} bucket(s) over "
-            f"cap={bucket_cap}; routed through bucket-min representative "
-            f"(~{stats['pairs_dropped']} member-member candidate pairs "
-            "dropped — raise bucket_cap to widen, or rely on the "
-            "assign path for keeper semantics)"
+            family.cap_warning.format(
+                n_over=stats["n_over"], cap=bucket_cap,
+                dropped=stats["pairs_dropped"],
+            )
         )
     tagged = band_rows.join(sizes, ["band", "bucket"])
     small = tagged.where(F.col("__bsz") <= bucket_cap).drop("__bsz", "__bmin")
@@ -314,10 +403,7 @@ def containment_screened_pairs(
         hot.select(F.col("__bmin").alias("doc_src"), F.col(id_col).alias("doc_sup"))
     )
     cand = allpairs.unionByName(routed).distinct()
-    toksets = docs.select(
-        F.col(id_col),
-        F.transform(_token_set(text_col), lambda t: F.xxhash64(t)).alias("toks"),
-    )
+    toksets = docs.select(F.col(id_col), family.verify_set(text_col).alias("toks"))
     a = toksets.select(F.col(id_col).alias("doc_src"), F.col("toks").alias("toks_a"))
     b = toksets.select(F.col(id_col).alias("doc_sup"), F.col("toks").alias("toks_b"))
     cont = F.round(
@@ -340,6 +426,7 @@ def minhash_dedup_assign(
     jaccard_threshold: float = 0.7,
     text_col: str = "text",
     id_col: str = "doc_id",
+    family: MinHashFamily = NATIVE_MINHASH,
 ) -> DataFrame:
     """Scalable LSH dedup: assign every doc a keeper (min doc_id sharing
     any LSH band bucket, verified by exact Jaccard) WITHOUT materializing
@@ -348,10 +435,11 @@ def minhash_dedup_assign(
     Pure linear dataflow: band rows → per-bucket min (hash agg) → per-doc
     min of bucket mins → verify only the doc→keeper pairs (N rows, not
     N² pairs). On a self-similar 100 TB corpus the all-pairs form blows
-    up quadratically; this stays O(N).
+    up quadratically; this stays O(N). With family=PORTABLE_MINHASH the
+    whole pipeline replays bit-for-bit in portable_minhash_oracle_sql.
     """
-    sig = minhash_signatures(docs, num_perm, text_col, id_col)
-    band_rows = _band_rows(sig, num_perm, bands, id_col)
+    sig = minhash_signatures(docs, num_perm, text_col, id_col, family)
+    band_rows = _band_rows(sig, num_perm, bands, id_col, family=family)
 
     # Per-bucket min as a window, not agg+self-join: the self-join form
     # recomputes the whole signature subtree for both sides; the window
@@ -364,14 +452,11 @@ def minhash_dedup_assign(
         .agg(F.min("bucket_min").alias("cand_keeper"))
     )
 
-    # Verify on xxhash64'd tokens: the O(pairs) array_intersect compares
-    # 8-byte longs instead of strings (same Jaccard barring a 2^-64
+    # Verify on hashed tokens: the O(pairs) array_intersect compares
+    # 8-byte longs instead of strings (same Jaccard barring a hash
     # collision — the ngram_jaccard_pairs exactness argument), measured
     # ~35% off the whole-query wall clock at sf0.1.
-    toksets = docs.select(
-        F.col(id_col),
-        F.transform(_token_set(text_col), lambda t: F.xxhash64(t)).alias("toks"),
-    )
+    toksets = docs.select(F.col(id_col), family.verify_set(text_col).alias("toks"))
     a = toksets.select(F.col(id_col), F.col("toks").alias("toks_self"))
     b = toksets.select(F.col(id_col).alias("cand_keeper"), F.col("toks").alias("toks_keeper"))
     inter = F.size(F.array_intersect("toks_self", "toks_keeper")).cast("double")
@@ -1326,95 +1411,13 @@ def _project_kept_tokens(joined: DataFrame, kept, id_col: str) -> DataFrame:
     )
 
 
-def _md5_32(col):
-    """First 8 md5 hex chars as a BIGINT — the engine-portable token
-    hash (DuckDB: CAST(('0x'||substr(md5(x),1,8)) AS BIGINT))."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-def minhash_dedup_assign_portable(
-    docs: DataFrame,
-    num_perm: int = 16,
-    bands: int = 8,
-    jaccard_threshold: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """ENGINE-PORTABLE twin of minhash_dedup_assign: identical linear
-    dataflow (row-local signatures → band rows → per-bucket min →
-    per-doc min → verify doc→keeper only), but every engine-specific
-    hash is replaced by a deterministic cross-engine form so the WHOLE
-    LSH pipeline — signatures, banding, bucket collisions, keeper
-    choice, verification — hash-matches a pure SQL oracle:
-
-    - base token hash: md5-prefix int instead of xxhash64 (the
-      exactness-upgrades trick used by the CMS/bloom/split queries);
-    - band bucket: polynomial encoding sig[2b]*M + sig[2b+1] instead
-      of xxhash64(slice) — injective for rows_per_band=2 since sig
-      values are < M = 2^31-1 (fits a BIGINT), so collisions are
-      EXACTLY signature-slice equality, same semantics as hashing;
-    - verify sets: md5-prefix token hashes (collisions identical on
-      both engines, so Jaccard values agree bit-for-bit).
-
-    The universal-hash permutation constants are shared with the
-    production form (_PERM_AB — deterministic module constants, so the
-    oracle embeds the same numbers). Production keeps xxhash64 (it is
-    measurably cheaper); this form exists because a driver-verified
-    exact run of the FULL pipeline is stronger evidence than the
-    production form's pytest-only gates — and it doubles as the
-    cross-engine spec of the algorithm.
-    """
-    band_rows = _portable_band_rows(docs, num_perm, bands, text_col, id_col)
-    wb = Window.partitionBy("band", "bucket")
-    candidate_keeper = (
-        band_rows.withColumn("bucket_min", F.min(id_col).over(wb))
-        .groupBy(id_col)
-        .agg(F.min("bucket_min").alias("cand_keeper"))
-    )
-    toksets = docs.select(
-        F.col(id_col),
-        # distinct AFTER hashing: an md5-32 collision between two
-        # distinct tokens must collapse identically on both engines
-        F.array_distinct(
-            F.transform(_token_set(text_col), lambda t: _md5_32(t))
-        ).alias("toks"),
-    )
-    a = toksets.select(F.col(id_col), F.col("toks").alias("toks_self"))
-    b2 = toksets.select(
-        F.col(id_col).alias("cand_keeper"), F.col("toks").alias("toks_keeper")
-    )
-    inter = F.size(F.array_intersect("toks_self", "toks_keeper")).cast("double")
-    union = F.size(F.array_union("toks_self", "toks_keeper")).cast("double")
-    verified = (
-        candidate_keeper.join(a, id_col)
-        .join(b2, "cand_keeper")
-        .select(
-            F.col(id_col),
-            F.col("cand_keeper"),
-            F.round(inter / union, 6).alias("jaccard"),
-        )
-    )
-    return verified.select(
-        id_col,
-        F.when(
-            (F.col("cand_keeper") < F.col(id_col))
-            & (F.col("jaccard") >= jaccard_threshold),
-            F.col("cand_keeper"),
-        )
-        .otherwise(F.col(id_col))
-        .alias("keeper_doc_id"),
-        F.col("jaccard").alias("keeper_jaccard"),
-    )
-
-
 def portable_minhash_oracle_sql(
     num_perm: int = 16, bands: int = 8, jaccard_threshold: float = 0.7
 ) -> str:
-    """DuckDB oracle for minhash_dedup_assign_portable — generated from
-    the SAME _PERM_AB constants the Spark form uses, so the two are one
-    spec in two dialects."""
-    rows_per_band = num_perm // bands
-    assert rows_per_band == 2
+    """DuckDB oracle for minhash_dedup_assign(family=PORTABLE_MINHASH)
+    — generated from the SAME _PERM_AB constants the Spark form uses, so
+    the two are one spec in two dialects."""
+    PORTABLE_MINHASH.check(num_perm, bands)
     m = _MERSENNE
     mins = ",\n             ".join(
         f"list_min(list_transform(bh, h -> ({a}*h + {b}) % {m}))"
@@ -1459,152 +1462,17 @@ def portable_minhash_oracle_sql(
     """
 
 
-def _portable_band_rows(docs, num_perm, bands, text_col, id_col):
-    """Portable MinHash signature -> (band, bucket) rows: md5-32 base
-    hashes, shared _PERM_AB permutations, polynomial bucket encoding —
-    the exact construction inside minhash_dedup_assign_portable,
-    factored so the screened composition below cannot drift from the
-    keeper-assignment form."""
-    rows_per_band = num_perm // bands
-    if rows_per_band != 2:
-        raise ValueError(
-            "portable bucket encoding requires rows_per_band == 2 "
-            f"(num_perm={num_perm}, bands={bands})"
-        )
-    toks = _token_set(text_col)
-    base = F.transform(toks, lambda t: F.pmod(_md5_32(t), F.lit(_MERSENNE)))
-    d = docs.where(toks.isNotNull() & (F.size(toks) > 0)).select(
-        F.col(id_col), base.alias("__bh")
-    )
-    mins = [_perm_min(F.col("__bh"), p) for p in range(num_perm)]
-    sig = d.select(F.col(id_col), F.array(*mins).alias("sig"))
-    return sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        (
-                            F.col("sig").getItem(2 * b) * F.lit(_MERSENNE)
-                            + F.col("sig").getItem(2 * b + 1)
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-
-
-def containment_screened_pairs_portable(
-    docs: DataFrame,
-    num_perm: int = 16,
-    bands: int = 8,
-    containment_threshold: float = 0.95,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_cap: int = 256,
-) -> DataFrame:
-    """ENGINE-PORTABLE twin of containment_screened_pairs — the FULL
-    production near-dup composition (MinHash band screen -> hot-bucket
-    cap with representative routing -> exact containment verify) in a
-    form a SQL oracle can restate bit-for-bit. Three substitutions,
-    same dataflow: md5-32 token hashes for xxhash64 (signatures AND
-    verify sets), polynomial band-bucket encoding for hash-of-slice,
-    and — the piece the r7 verdict called non-expressible — the
-    bucket-size cap kept because the cap is DETERMINISTIC: which
-    buckets exceed it, and the member<->min-id pairs they route into,
-    are pure functions of the data, so the capped candidate set is as
-    oracle-checkable as the uncapped one. Directed output pairs
-    (doc_src, doc_sup, containment >= tau over md5-hashed distinct
-    token sets). Same scale posture as the production form: pair work
-    quadratic ONLY inside <=cap buckets, 2n in over-cap ones, logged
-    drop counts (no silent caps)."""
-    # materialized once for the same reason as the production twin:
-    # the stats action below would otherwise recompute the corpus-wide
-    # signature build that the returned plan reads twice more (r8
-    # ADVICE); localCheckpoint, not persist — see the production twin.
-    # eager=False (r15): the unconditional stats .first() below
-    # materializes it in the same job (guide §1.2)
-    band_rows = _portable_band_rows(
-        docs, num_perm, bands, text_col, id_col
-    ).localCheckpoint(eager=False)
-    sizes = band_rows.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("__bsz"), F.min(id_col).alias("__bmin")
-    )
-    over = sizes.where(F.col("__bsz") > bucket_cap)
-    stats = over.agg(
-        F.count(F.lit(1)).alias("n_over"),
-        F.coalesce(
-            F.sum(F.col("__bsz") * (F.col("__bsz") - 1) - 2 * (F.col("__bsz") - 1)),
-            F.lit(0),
-        ).alias("pairs_dropped"),
-    ).first()
-    if stats["n_over"]:
-        import logging
-
-        logging.getLogger("helium_etl_lite_spark").warning(
-            f"portable containment screen: {stats['n_over']} bucket(s) "
-            f"over cap={bucket_cap}; routed through bucket-min "
-            f"representative (~{stats['pairs_dropped']} member-member "
-            "candidate pairs dropped)"
-        )
-    tagged = band_rows.join(sizes, ["band", "bucket"])
-    small = tagged.where(F.col("__bsz") <= bucket_cap).drop("__bsz", "__bmin")
-    left = small.alias("l")
-    right = small.alias("r")
-    allpairs = left.join(
-        right,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.bucket") == F.col("r.bucket"))
-        & (F.col(f"l.{id_col}") != F.col(f"r.{id_col}")),
-    ).select(
-        F.col(f"l.{id_col}").alias("doc_src"),
-        F.col(f"r.{id_col}").alias("doc_sup"),
-    )
-    hot = tagged.where(
-        (F.col("__bsz") > bucket_cap) & (F.col(id_col) != F.col("__bmin"))
-    )
-    routed = hot.select(
-        F.col(id_col).alias("doc_src"), F.col("__bmin").alias("doc_sup")
-    ).unionByName(
-        hot.select(F.col("__bmin").alias("doc_src"), F.col(id_col).alias("doc_sup"))
-    )
-    cand = allpairs.unionByName(routed).distinct()
-    toksets = docs.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform(_token_set(text_col), lambda t: _md5_32(t))
-        ).alias("toks"),
-    )
-    a = toksets.select(F.col(id_col).alias("doc_src"), F.col("toks").alias("toks_a"))
-    b = toksets.select(F.col(id_col).alias("doc_sup"), F.col("toks").alias("toks_b"))
-    cont = F.round(
-        F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
-        / F.size("toks_a"),
-        6,
-    )
-    return (
-        cand.join(a, "doc_src")
-        .join(b, "doc_sup")
-        .select("doc_src", "doc_sup", cont.alias("containment"))
-        .where(F.col("containment") >= containment_threshold)
-        .orderBy("doc_src", "doc_sup")
-    )
-
-
 def portable_screened_oracle_sql(
     num_perm: int = 16,
     bands: int = 8,
     containment_threshold: float = 0.95,
     bucket_cap: int = 256,
 ) -> str:
-    """DuckDB oracle for containment_screened_pairs_portable, generated
-    from the SAME _PERM_AB / cap constants — screen, cap, routing and
-    verify restated in one statement."""
-    rows_per_band = num_perm // bands
-    assert rows_per_band == 2
+    """DuckDB oracle for containment_screened_pairs(family=
+    PORTABLE_MINHASH) ordered by (doc_src, doc_sup), generated from the
+    SAME _PERM_AB / cap constants — screen, cap, routing and verify
+    restated in one statement."""
+    PORTABLE_MINHASH.check(num_perm, bands)
     m = _MERSENNE
     mins = ",\n             ".join(
         f"list_min(list_transform(bh, h -> ({a}*h + {b}) % {m}))"
@@ -1667,7 +1535,7 @@ def simhash_assign_portable(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """ENGINE-PORTABLE SimHash near-dup keeper assignment — the SimHash
-    sibling of minhash_dedup_assign_portable, closing the last
+    sibling of the PORTABLE_MINHASH keeper assignment, closing the last
     engine-opaque member of the text near-dup family: a 32-bit SimHash
     from md5-prefix token hashes (bit b votes sign(Σ ±1); ties >= 0
     round to 1, deterministically on both engines), pigeonholed into

@@ -1061,30 +1061,48 @@ def pq_ann_rerank(
     )
 
 
-def _portable_assign_quantized(points: DataFrame, cs: DataFrame) -> DataFrame:
-    """One portable-kmeans assignment pass: quantized points (vec_id,
-    q) against a K-row codebook (centroid_id, cq), broadcast join +
-    per-point min with deterministic ties on centroid_id. The SINGLE
-    assignment definition the Lloyd loop, the final-stats pass and
-    kmeans_portable_assign all share, so training-time and
-    selection-time assignments cannot drift."""
-    d = (
-        F.aggregate(F.zip_with("q", "q", lambda x, y: x * y),
-                    F.lit(0.0), lambda a, x: a + x)
-        - 2.0 * F.aggregate(F.zip_with("q", "cq", lambda x, y: x * y),
-                            F.lit(0.0), lambda a, x: a + x)
-        + F.aggregate(F.zip_with("cq", "cq", lambda x, y: x * y),
-                      F.lit(0.0), lambda a, x: a + x)
+def _quantize(
+    df: DataFrame, scale: int, id_col: str, vec_col: str,
+    out_id: str = "vec_id", out_q: str = "q",
+) -> DataFrame:
+    """(out_id, out_q) with every element quantized to round(x*scale) —
+    one IEEE multiply + one half-away-from-zero round, both
+    engine-identical. The single entry point of the portable family:
+    from here on all arithmetic is on integer-valued doubles."""
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.transform(
+            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
+        ).alias(out_q),
     )
-    pairs = points.join(F.broadcast(cs)).withColumn("dist", d)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("dist").asc(), F.col("centroid_id").asc()
-    )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "q", "centroid_id", "dist")
-    )
+
+
+def _sq_dist(a, b):
+    """Squared L2 as dot(a,a) - 2*dot(a,b) + dot(b,b); on quantized
+    vectors every partial sum is an integer below 2^53, so it is exact
+    in any summation order."""
+    return dot(a, a) - 2.0 * dot(a, b) + dot(b, b)
+
+
+def _top_n(df: DataFrame, part: str, by: str, tie: str, n: int) -> DataFrame:
+    """The n lowest rows per `part` by (by, tie), ranked 1..n in `rn`."""
+    w = Window.partitionBy(part).orderBy(F.col(by).asc(), F.col(tie).asc())
+    return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= n)
+
+
+def _portable_assign_quantized(
+    points: DataFrame, cs: DataFrame, part: str = "vec_id", q: str = "q",
+    n: int = 1,
+) -> DataFrame:
+    """Quantized points (part, q) against a K-row codebook (centroid_id,
+    cq): broadcast join + the n nearest entries per point (`dist`,
+    `rn`), deterministic ties on centroid_id. The SINGLE assignment
+    definition the Lloyd loop, the final-stats pass,
+    kmeans_portable_assign, IVF list build and probe (n=nprobe) and PQ
+    encoding all share, so training-time and selection-time
+    assignments cannot drift."""
+    pairs = points.join(F.broadcast(cs)).withColumn("dist", _sq_dist(q, "cq"))
+    return _top_n(pairs, part, "dist", "centroid_id", n)
 
 
 def kmeans_portable_assign(
@@ -1095,18 +1113,11 @@ def kmeans_portable_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign raw vectors to a trained portable-kmeans codebook:
-    quantize exactly as training did (round(x*scale), the one IEEE
-    multiply + half-away round), then the shared broadcast assignment
-    pass. Returns (vec_id, centroid_id, dist) — dist is the exact
-    integer-valued quantized squared-L2. The K-row codebook broadcasts;
-    the fact side never shuffles."""
-    q = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0),
-        ).alias("q"),
-    )
+    quantize exactly as training did, then the shared broadcast
+    assignment pass. Returns (vec_id, centroid_id, dist) — dist is the
+    exact integer-valued quantized squared-L2. The K-row codebook
+    broadcasts; the fact side never shuffles."""
+    q = _quantize(vectors, scale, id_col, vec_col)
     return _portable_assign_quantized(q, cents).select(
         "vec_id", "centroid_id", "dist"
     )
@@ -1126,10 +1137,11 @@ def kmeans_portable_quantized(
     double, so the whole iterative algorithm is bit-exact across
     engines (the graph_kcore_peel trick applied to clustering).
 
-    Exactness argument: elements quantize to round(x*scale) — one IEEE
-    multiply + one half-away-from-zero round, both engine-identical.
-    From there all arithmetic is on integer-valued doubles: squared-L2
-    distances via dot(q,q) - 2*dot(q,c) + dot(c,c) stay below 2^53
+    Exactness argument: elements quantize to round(x*scale) (_quantize)
+    — one IEEE multiply + one half-away-from-zero round, both
+    engine-identical. From there all arithmetic is on integer-valued
+    doubles: squared-L2 distances via dot(q,q) - 2*dot(q,c) + dot(c,c)
+    (_sq_dist) stay below 2^53
     (|q| <= ~scale, dim 64 => dist <= 64*(2*scale)^2 ~ 2.6e13), so
     float summation is EXACT in any order — no FP-environment
     dependence, unlike the plain `vec_kmeans`/`lloyd_refine` path
@@ -1163,12 +1175,7 @@ def kmeans_portable_quantized(
     Checked loudly below: a filtered corpus or string ids would
     otherwise silently train fewer than k centroids.
     """
-    q = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
-        ).alias("q"),
-    )
+    q = _quantize(vectors, scale, id_col, vec_col)
     q = q.repartition(n_tasks).localCheckpoint(eager=False)
     cents = q.where(F.col("vec_id") < k).select(
         F.col("vec_id").alias("centroid_id"), F.col("q").alias("cq")
@@ -1181,10 +1188,8 @@ def kmeans_portable_quantized(
             f"numerics covering 0..{k - 1}"
         )
 
-    _assign = _portable_assign_quantized
-
     for _ in range(rounds):
-        best = _assign(q, cents)
+        best = _portable_assign_quantized(q, cents)
         sums = (
             best.select("centroid_id", F.posexplode("q").alias("pos", "val"))
             .groupBy("centroid_id", "pos")
@@ -1213,7 +1218,7 @@ def kmeans_portable_quantized(
 
     if not compute_stats:
         return None, cents
-    final = _assign(q, cents)
+    final = _portable_assign_quantized(q, cents)
     stats = (
         final.groupBy("centroid_id")
         .agg(
@@ -1258,59 +1263,21 @@ def ann_topk_ivf_portable(
         compute_stats=False,
     )
 
-    qv = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
-        ).alias("q"),
-    ).repartition(n_tasks)
-
-    def _sq(a: str, b: str):
-        return (
-            F.aggregate(F.zip_with(a, a, lambda x, y: x * y),
-                        F.lit(0.0), lambda acc, x: acc + x)
-            - 2.0 * F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                                F.lit(0.0), lambda acc, x: acc + x)
-            + F.aggregate(F.zip_with(b, b, lambda x, y: x * y),
-                          F.lit(0.0), lambda acc, x: acc + x)
-        )
-
+    qv = _quantize(vectors, scale, id_col, vec_col).repartition(n_tasks)
     # Inverted lists: every vector -> nearest codebook entry.
-    lw = Window.partitionBy("vec_id").orderBy(
-        F.col("dist").asc(), F.col("centroid_id").asc()
+    lists = _portable_assign_quantized(qv, cents).select(
+        "vec_id", "q", F.col("centroid_id").alias("list_id")
     )
-    lists = (
-        qv.join(F.broadcast(cents))
-        .withColumn("dist", _sq("q", "cq"))
-        .withColumn("rn", F.row_number().over(lw))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "q", F.col("centroid_id").alias("list_id"))
-    )
-
     # Probe: nprobe nearest lists per query.
-    qq = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
-        ).alias("qq"),
-    )
-    pw = Window.partitionBy("q_id").orderBy(
-        F.col("pdist").asc(), F.col("centroid_id").asc()
-    )
-    probe = (
-        qq.join(F.broadcast(cents))
-        .withColumn("pdist", _sq("qq", "cq"))
-        .withColumn("prn", F.row_number().over(pw))
-        .where(F.col("prn") <= nprobe)
-        .select("q_id", "qq", F.col("centroid_id").alias("list_id"))
+    qq = _quantize(queries, scale, id_col, vec_col, "q_id", "qq")
+    probe = _portable_assign_quantized(qq, cents, "q_id", "qq", nprobe).select(
+        "q_id", "qq", F.col("centroid_id").alias("list_id")
     )
 
     cand = probe.join(lists, "list_id").where(F.col("q_id") != F.col("vec_id"))
-    scored = cand.withColumn("dist_q", _sq("qq", "q").cast("long"))
-    w = Window.partitionBy("q_id").orderBy(F.col("dist_q").asc(), F.col("vec_id").asc())
+    scored = cand.withColumn("dist_q", _sq_dist("qq", "q").cast("long"))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
+        _top_n(scored, "q_id", "dist_q", "vec_id", k)
         .select("q_id", "vec_id", "dist_q", "rn")
         .orderBy("q_id", "rn")
     )
@@ -1357,28 +1324,9 @@ def ann_topk_pq_portable(
     only wide shuffle is the (q_id, vec_id) partial-aggregable SUM.
     """
     sub_len = dim // m_sub
-    qv = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
-        ).alias("q"),
-    ).repartition(n_tasks).localCheckpoint(eager=False)
-    qq = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
-        ).alias("q"),
-    )
-
-    def _sq(a: str, b: str):
-        return (
-            F.aggregate(F.zip_with(a, a, lambda x, y: x * y),
-                        F.lit(0.0), lambda acc, x: acc + x)
-            - 2.0 * F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                                F.lit(0.0), lambda acc, x: acc + x)
-            + F.aggregate(F.zip_with(b, b, lambda x, y: x * y),
-                          F.lit(0.0), lambda acc, x: acc + x)
-        )
+    qv = _quantize(vectors, scale, id_col, vec_col).repartition(n_tasks)
+    qv = qv.localCheckpoint(eager=False)
+    qq = _quantize(queries, scale, id_col, vec_col, "q_id")
 
     codes = None
     luts = None
@@ -1391,20 +1339,8 @@ def ann_topk_pq_portable(
             id_col="vec_id", vec_col="embedding", n_tasks=n_tasks,
             compute_stats=False,
         )
-        ew = Window.partitionBy("vec_id").orderBy(
-            F.col("dist").asc(), F.col("centroid_id").asc()
-        )
-        enc = (
-            sub.withColumnRenamed("embedding", "sq")
-            .join(F.broadcast(cents))
-            .withColumn("dist", _sq("sq", "cq"))
-            .withColumn("rn", F.row_number().over(ew))
-            .where(F.col("rn") == 1)
-            .select(
-                "vec_id",
-                F.lit(m).alias("m"),
-                F.col("centroid_id").alias("code"),
-            )
+        enc = _portable_assign_quantized(sub, cents, q="embedding").select(
+            "vec_id", F.lit(m).alias("m"), F.col("centroid_id").alias("code")
         )
         qsub = qq.select(
             "q_id", F.slice("q", m * sub_len + 1, sub_len).alias("sq")
@@ -1415,7 +1351,7 @@ def ann_topk_pq_portable(
                 "q_id",
                 F.lit(m).alias("m"),
                 F.col("centroid_id").alias("code"),
-                _sq("sq", "cq").alias("d"),
+                _sq_dist("sq", "cq").alias("d"),
             )
         )
         codes = enc if codes is None else codes.unionByName(enc)
@@ -1427,12 +1363,8 @@ def ann_topk_pq_portable(
         .groupBy("q_id", "vec_id")
         .agg(F.sum("d").cast("long").alias("adc_dist"))
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
     return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
+        _top_n(adc, "q_id", "adc_dist", "vec_id", k)
         .select("q_id", "vec_id", "adc_dist", "rn")
         .orderBy("q_id", "rn")
     )
@@ -1485,36 +1417,10 @@ def ann_topk_ivfpq_portable(
         compute_stats=False,
     )
 
-    def _quant(df, out_id):
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.transform(
-                F.col(vec_col),
-                lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0),
-            ).alias("q"),
-        )
-
-    def _sq(a: str, b: str):
-        return (
-            F.aggregate(F.zip_with(a, a, lambda x, y: x * y),
-                        F.lit(0.0), lambda acc, x: acc + x)
-            - 2.0 * F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                                F.lit(0.0), lambda acc, x: acc + x)
-            + F.aggregate(F.zip_with(b, b, lambda x, y: x * y),
-                          F.lit(0.0), lambda acc, x: acc + x)
-        )
-
-    qv = _quant(vectors, "vec_id").repartition(n_tasks).localCheckpoint(
-        eager=False
-    )
-    aw = Window.partitionBy("vec_id").orderBy(
-        F.col("dist").asc(), F.col("centroid_id").asc()
-    )
+    qv = _quantize(vectors, scale, id_col, vec_col).repartition(n_tasks)
+    qv = qv.localCheckpoint(eager=False)
     assign = (
-        qv.join(F.broadcast(cents))
-        .withColumn("dist", _sq("q", "cq"))
-        .withColumn("rn", F.row_number().over(aw))
-        .where(F.col("rn") == 1)
+        _portable_assign_quantized(qv, cents)
         .select(
             "vec_id",
             "q",
@@ -1536,37 +1442,18 @@ def ann_topk_ivfpq_portable(
             compute_stats=False,
         )
         pq_cents[m] = cm
-        ew = Window.partitionBy("vec_id").orderBy(
-            F.col("dist").asc(), F.col("centroid_id").asc()
-        )
-        enc = (
-            sub.withColumnRenamed("embedding", "sq")
-            .join(F.broadcast(cm))
-            .withColumn("dist", _sq("sq", "cq"))
-            .withColumn("rn", F.row_number().over(ew))
-            .where(F.col("rn") == 1)
-            .select(
-                "vec_id", F.lit(m).alias("m"), F.col("centroid_id").alias("code")
-            )
+        enc = _portable_assign_quantized(sub, cm, q="embedding").select(
+            "vec_id", F.lit(m).alias("m"), F.col("centroid_id").alias("code")
         )
         codes = enc if codes is None else codes.unionByName(enc)
     codes = codes.join(assign.select("vec_id", "list_id"), "vec_id")
 
-    qq = _quant(queries, "q_id")
-    pw = Window.partitionBy("q_id").orderBy(
-        F.col("pdist").asc(), F.col("centroid_id").asc()
-    )
-    probe = (
-        qq.join(F.broadcast(cents))
-        .withColumn("pdist", _sq("q", "cq"))
-        .withColumn("prn", F.row_number().over(pw))
-        .where(F.col("prn") <= nprobe)
-        .select(
-            "q_id",
-            "q",
-            F.col("centroid_id").alias("list_id"),
-            F.zip_with("q", "cq", lambda x, y: x - y).alias("qres"),
-        )
+    qq = _quantize(queries, scale, id_col, vec_col, "q_id")
+    probe = _portable_assign_quantized(qq, cents, "q_id", n=nprobe).select(
+        "q_id",
+        "q",
+        F.col("centroid_id").alias("list_id"),
+        F.zip_with("q", "cq", lambda x, y: x - y).alias("qres"),
     )
     luts = None
     for m in range(m_sub):
@@ -1582,7 +1469,7 @@ def ann_topk_ivfpq_portable(
                 "list_id",
                 F.lit(m).alias("m"),
                 F.col("centroid_id").alias("code"),
-                _sq("sq", "cq").alias("d"),
+                _sq_dist("sq", "cq").alias("d"),
             )
         )
         luts = lut if luts is None else luts.unionByName(lut)
@@ -1593,27 +1480,18 @@ def ann_topk_ivfpq_portable(
         .groupBy("q_id", "vec_id")
         .agg(F.sum("d").cast("long").alias("adc_dist"))
     )
-    sw = Window.partitionBy("q_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    short = (
-        adc.withColumn("srn", F.row_number().over(sw))
-        .where(F.col("srn") <= shortlist)
-        .select("q_id", "vec_id")
+    short = _top_n(adc, "q_id", "adc_dist", "vec_id", shortlist).select(
+        "q_id", "vec_id"
     )
     rer = (
         short.join(assign.select("vec_id", "q"), "vec_id")
         .join(
             F.broadcast(qq.select("q_id", F.col("q").alias("qfull"))), "q_id"
         )
-        .withColumn("dist_q", _sq("qfull", "q").cast("long"))
-    )
-    rw = Window.partitionBy("q_id").orderBy(
-        F.col("dist_q").asc(), F.col("vec_id").asc()
+        .withColumn("dist_q", _sq_dist("qfull", "q").cast("long"))
     )
     return (
-        rer.withColumn("rn", F.row_number().over(rw))
-        .where(F.col("rn") <= k)
+        _top_n(rer, "q_id", "dist_q", "vec_id", k)
         .select("q_id", "vec_id", "dist_q", "rn")
         .orderBy("q_id", "rn")
     )

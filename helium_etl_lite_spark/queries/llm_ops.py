@@ -2039,19 +2039,19 @@ def text_dedup_winnow(spark, sf_dir):
 )
 def text_dedup_minhash_portable(spark, sf_dir):
     # The FULL MinHash->LSH-band->bucket->keeper->verify pipeline,
-    # driver-verified EXACT: minhash_dedup_assign_portable swaps the
-    # two engine-specific hashes (xxhash64 base hash, xxhash64 band
-    # bucket) for portable forms (md5-prefix ints; injective
-    # polynomial bucket encoding) so the DuckDB oracle — generated
-    # from the SAME permutation constants — replays signatures,
-    # bucket collisions, keeper assignment and Jaccard verification
-    # bit-for-bit. Production (text_dedup_minhash) keeps xxhash64 for
+    # oracle-verified EXACT: text_dedup_minhash's pipeline run with the
+    # PORTABLE_MINHASH hash family (md5-prefix token ints; injective
+    # polynomial bucket encoding in place of the two xxhash64s) so the
+    # DuckDB oracle — generated from the SAME permutation constants —
+    # replays signatures, bucket collisions, keeper assignment and
+    # Jaccard verification bit-for-bit. Production keeps xxhash64 for
     # speed; this registration turns the LSH pipeline's correctness
     # from pytest-only gates into a driver-checked exact verdict, and
     # the generated SQL doubles as the algorithm's cross-engine spec.
     t = Tables(spark, sf_dir)
-    return dedup.minhash_dedup_assign_portable(
-        t.documents, num_perm=16, bands=8, jaccard_threshold=0.7
+    return dedup.minhash_dedup_assign(
+        t.documents, num_perm=16, bands=8, jaccard_threshold=0.7,
+        family=dedup.PORTABLE_MINHASH,
     )
 
 
@@ -3914,23 +3914,19 @@ def dedup_containment_screened_portable(spark, sf_dir):
     -> deterministic hot-bucket cap with representative routing ->
     exact containment verify — with a DRIVER-EXACT oracle.
     dedup_containment_screened stays rows-only because its signatures
-    ride xxhash64; this twin swaps in the md5-32/polynomial-bucket
-    portable construction (shared with text_dedup_minhash_portable via
-    operators/dedup.py _portable_band_rows) and keeps EVERYTHING else,
-    including the bucket-size cap the r7 verdict asked for: the cap is
-    a deterministic function of the data, so the capped candidate set
-    is oracle-expressible after all. One driver-exact verdict now
-    covers screen geometry, cap/routing semantics, and the containment
-    arithmetic end to end (operators/dedup.py
-    containment_screened_pairs_portable)."""
+    ride xxhash64; this registration runs the same
+    containment_screened_pairs with the md5-32/polynomial-bucket
+    PORTABLE_MINHASH family (shared with text_dedup_minhash_portable)
+    and keeps EVERYTHING else, including the hot-bucket cap: the cap
+    is a deterministic function of the data, so the capped candidate
+    set is oracle-expressible after all. One exact oracle check covers
+    screen geometry, cap/routing semantics, and the containment
+    arithmetic end to end."""
     t = Tables(spark, sf_dir)
-    return dedup.containment_screened_pairs_portable(
-        t.documents,
-        num_perm=16,
-        bands=8,
-        containment_threshold=0.95,
-        bucket_cap=256,
-    )
+    return dedup.containment_screened_pairs(
+        t.documents, num_perm=16, bands=8, containment_threshold=0.95,
+        bucket_cap=256, family=dedup.PORTABLE_MINHASH,
+    ).orderBy("doc_src", "doc_sup")
 
 
 _BPEP_BUDGET = 60_000

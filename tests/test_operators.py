@@ -1860,30 +1860,41 @@ class TestPortableMinhash:
         rows += [(100 + j, " ".join(f"solo{j}w{i}" for i in range(30)))
                  for j in range(5)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        for fn in (dedup.minhash_dedup_assign, dedup.minhash_dedup_assign_portable):
-            out = {r["doc_id"]: r for r in fn(docs).collect()}
+        for fam in (dedup.NATIVE_MINHASH, dedup.PORTABLE_MINHASH):
+            out = {
+                r["doc_id"]: r
+                for r in dedup.minhash_dedup_assign(docs, family=fam).collect()
+            }
             for i in range(1, 5):
-                assert out[i]["keeper_doc_id"] == 0, fn.__name__
+                assert out[i]["keeper_doc_id"] == 0, fam.name
                 assert out[i]["keeper_jaccard"] >= 0.9
             for j in range(5):
-                assert out[100 + j]["keeper_doc_id"] == 100 + j, fn.__name__
+                assert out[100 + j]["keeper_doc_id"] == 100 + j, fam.name
 
     def test_portable_signatures_are_distinct_per_position(self, spark):
         # same r5-ADVICE pin as the production form: the permutation
         # lambdas must not collapse to one
-        from helium_etl_lite_spark.operators.dedup import (
-            _MERSENNE,
-            _md5_32,
-            _perm_min,
-            _token_set,
-        )
-
         docs = spark.createDataFrame(
             [(1, " ".join(f"w{i}" for i in range(50)))], "doc_id long, text string"
         )
-        base = F.transform(_token_set("text"), lambda t: F.pmod(_md5_32(t), F.lit(_MERSENNE)))
-        sig = docs.select(F.array(*[_perm_min(base, p) for p in range(16)]).alias("s")).first()["s"]
+        sig = dedup.minhash_signatures(
+            docs, 16, family=dedup.PORTABLE_MINHASH
+        ).first()["sig"]
         assert len(set(sig)) > 8, sig
+
+    def test_portable_band_width_is_checked_with_value_error(self, spark):
+        # the polynomial bucket encodes exactly two signature rows; the
+        # oracle generators must refuse other widths even under -O
+        docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+        for make in (
+            lambda: dedup.portable_minhash_oracle_sql(num_perm=16, bands=4),
+            lambda: dedup.portable_screened_oracle_sql(num_perm=16, bands=4),
+            lambda: dedup.minhash_dedup_assign(
+                docs, 16, 4, family=dedup.PORTABLE_MINHASH
+            ),
+        ):
+            with pytest.raises(ValueError, match="rows_per_band == 2"):
+                make()
 
 
 class TestPortableHll:
@@ -2711,22 +2722,19 @@ class TestSampleQuotaWaterfill:
 
 class TestContainmentScreenedPortable:
     def test_capped_equals_uncapped_when_no_overflow(self, spark, sf_dir):
-        from helium_etl_lite_spark.operators.dedup import (
-            containment_screened_pairs_portable,
-        )
         from helium_etl_lite_spark.tables import Tables
 
         docs = Tables(spark, sf_dir).documents.orderBy("doc_id").limit(60)
-        hi = containment_screened_pairs_portable(docs, bucket_cap=10_000)
-        lo = containment_screened_pairs_portable(docs, bucket_cap=256)
+        hi = dedup.containment_screened_pairs(
+            docs, bucket_cap=10_000, family=dedup.PORTABLE_MINHASH
+        )
+        lo = dedup.containment_screened_pairs(
+            docs, bucket_cap=256, family=dedup.PORTABLE_MINHASH
+        )
         assert hi.exceptAll(lo).count() == 0
         assert lo.exceptAll(hi).count() == 0
 
     def test_overfull_bucket_routes_through_min_representative(self, spark):
-        from helium_etl_lite_spark.operators.dedup import (
-            containment_screened_pairs_portable,
-        )
-
         # Five identical docs: every band bucket holds all five, so at
         # bucket_cap=2 the all-pairs path is empty and every candidate
         # pair must involve the min-id doc (the representative).
@@ -2734,8 +2742,9 @@ class TestContainmentScreenedPortable:
             [(i, "alpha beta gamma delta epsilon") for i in range(5)],
             "doc_id long, text string",
         )
-        out = containment_screened_pairs_portable(
-            docs, containment_threshold=0.9, bucket_cap=2
+        out = dedup.containment_screened_pairs(
+            docs, containment_threshold=0.9, bucket_cap=2,
+            family=dedup.PORTABLE_MINHASH,
         ).collect()
         assert out, "identical docs must verify as containment pairs"
         assert all(r["doc_src"] == 0 or r["doc_sup"] == 0 for r in out)

@@ -1557,3 +1557,22 @@ def test_dsir_incremental_state_arithmetic_is_broadcast(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+def test_minhash_hash_family_stays_with_its_caller(spark, sf_dir):
+    # The MinHash pipelines take the hash family as a parameter; a
+    # family leaking into the wrong registration would change the
+    # production hash (and SIG_VERSION semantics) or break the portable
+    # twin's DuckDB oracle. Native plans hash with xxhash64 only, the
+    # portable twins with md5 only.
+    from helium_etl_lite_spark.plans.explain_tools import formatted_plan
+
+    for name, present, absent in (
+        ("text_dedup_minhash", "xxhash64(", "md5("),
+        ("dedup_containment_screened", "xxhash64(", "md5("),
+        ("text_dedup_minhash_portable", "md5(", "xxhash64("),
+        ("dedup_containment_screened_portable", "md5(", "xxhash64("),
+    ):
+        plan = formatted_plan(q(name, spark, sf_dir))
+        assert present in plan, (name, present)
+        assert absent not in plan, (name, absent)

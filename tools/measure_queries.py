@@ -1,15 +1,16 @@
-"""r14 optimization-round measurement harness.
+"""Per-query measurement harness.
 
 Times individual registered queries in isolation at a given sf dir,
 with BOTH terminal actions: the bench's count() (series-comparable) and
 the guide-§1.4 noop sink (computes every column, the honest
-full-materialization cost). Prints per-query min/median over N runs.
+full-materialization cost). Prints per-query min/median over N runs
+and the number of Spark jobs one run schedules.
 
 Usage:
-  python3 tools/measure_r14.py q1 q2 ...            # sf0.1, count+noop
-  SPARK_GRAFT_SF_DIR=... N_RUNS=3 ACTION=count python3 tools/measure_r14.py q1
+  python3 tools/measure_queries.py q1 q2 ...            # sf0.1, count+noop
+  SPARK_GRAFT_SF_DIR=... N_RUNS=3 ACTION=count python3 tools/measure_queries.py q1
 
-Also dumps .explain("formatted") to plans/r14/<query>_<tag>.txt when
+Also dumps .explain("formatted") to plans/measure/<query>_<tag>.txt when
 PLAN_TAG is set (e.g. PLAN_TAG=before).
 """
 
@@ -38,7 +39,7 @@ def main():
     action = os.environ.get("ACTION", "both")  # count | noop | both
     plan_tag = os.environ.get("PLAN_TAG", "")
     registry.load_all()
-    spark = get_spark("measure_r14")
+    spark = get_spark("measure_queries")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     try:
         # warm parquet footers
@@ -50,10 +51,10 @@ def main():
         for name in names:
             fn = registry.QUERIES[name]
             if plan_tag:
-                os.makedirs(os.path.join(repo, "plans", "r14"), exist_ok=True)
+                os.makedirs(os.path.join(repo, "plans", "measure"), exist_ok=True)
                 plan = formatted_plan(fn(spark, sf_dir))
                 with open(
-                    os.path.join(repo, "plans", "r14", f"{name}_{plan_tag}.txt"), "w"
+                    os.path.join(repo, "plans", "measure", f"{name}_{plan_tag}.txt"), "w"
                 ) as f:
                     f.write(plan)
             acts = {"count": lambda d: d.count(), "noop": _noop}
@@ -62,15 +63,19 @@ def main():
                     continue
                 if n_runs <= 0:
                     continue
-                spark.sparkContext.setJobDescription(f"{name}:{aname}")
                 runs = []
-                for _ in range(n_runs):
+                tracker = spark.sparkContext.statusTracker()
+                for ri in range(n_runs):
+                    group = f"{name}:{aname}:{ri}"
+                    spark.sparkContext.setJobGroup(group, group)
                     t0 = time.perf_counter()
                     act(fn(spark, sf_dir))
                     runs.append(time.perf_counter() - t0)
+                njobs = len(tracker.getJobIdsForGroup(f"{name}:{aname}:{n_runs - 1}"))
                 print(
                     f"{name} [{aname}] min {min(runs):.3f}s "
                     f"median {statistics.median(runs):.3f}s "
+                    f"jobs/run {njobs} "
                     f"runs {', '.join(f'{r:.3f}' for r in runs)}",
                     flush=True,
                 )
