@@ -44,7 +44,7 @@ import sys
 import time
 import tomllib
 
-from .etl.pipeline import FollowerConfig, IncrementalFollower
+from .etl.pipeline import FollowerConfig, IncrementalFollower, open_sink
 from .etl.schemas import (
     BLOCK_SCHEMA,
     REWARDS_OUT_SCHEMA,
@@ -133,27 +133,16 @@ def _catch_up(spark, cfg) -> tuple[int, tuple[int, int]]:
     node_addr is set (reference settings.node_addr, src/settings.rs:33),
     landed block files otherwise. Returns (blocks loaded, cursor)."""
     if "node_addr" in cfg:
-        from .etl.pipeline import CursorStore, rpc_catch_up
+        from .etl.pipeline import rpc_catch_up
         from .sources.block_source import HttpRpcClient
 
         client = HttpRpcClient(str(cfg["node_addr"]))
         fc = _follower_config(cfg)
         n = rpc_catch_up(spark, client, fc, filters=_filters(spark, cfg))
-        if fc.atomic:
-            from .etl.snapshot import SnapshotStore
-
-            m = SnapshotStore(fc.out_dir).current()
-            return n, (None if m is None else (m["height"], m["first_block"]))
-        cur = CursorStore(spark, os.path.join(str(cfg["out_dir"]), "_meta", "follower_info")).read()
-        return n, cur
+        return n, open_sink(spark, fc.out_dir, fc.atomic, fc.block_range_size).cursor()
     f = _follower(spark, cfg)
     n = f.catch_up()
-    if f.config.atomic:
-        from .etl.snapshot import SnapshotStore
-
-        m = SnapshotStore(f.config.out_dir).current()
-        return n, (None if m is None else (m["height"], m["first_block"]))
-    return n, f.cursor.read()
+    return n, f.sink.cursor()
 
 
 def cmd_migrate(spark, cfg, log=None) -> None:
@@ -252,15 +241,11 @@ def cmd_status(cfg, log=None) -> dict:
     """Operational status without a SparkSession (the reference's
     follower_info peek, src/follower.rs:123-142, plus the physical
     inventory an operator actually wants): cursor position, sink mode,
-    snapshot version, and per-table partition/file/byte counts. Atomic
-    sinks read everything from the manifest; plain sinks read the
-    cursor with pyarrow and walk the table dirs."""
-    import pyarrow.parquet as pq
-
-    from .etl.snapshot import SnapshotStore
-
+    snapshot version (null on a plain sink), and per-table
+    partition/file/byte counts. The sink found on disk answers from its
+    committed state — the snapshot manifest, or the plain cursor file
+    read with pyarrow — and its partition directories."""
     out = str(cfg["out_dir"])
-    status: dict = {"out_dir": out}
 
     def table_stats(paths: list[str]) -> dict:
         n_files = 0
@@ -274,51 +259,16 @@ def cmd_status(cfg, log=None) -> dict:
                     n_bytes += os.path.getsize(os.path.join(p, f))
         return {"n_partitions": len(paths), "n_files": n_files, "n_bytes": n_bytes}
 
-    store = SnapshotStore(out)
-    m = store.current()
-    if m is not None:
-        status["sink"] = "atomic"
-        status["snapshot_version"] = m["version"]
-        status["height"] = m["height"]
-        status["first_block"] = m["first_block"]
-        status["tables"] = {
-            t: table_stats(
-                [
-                    os.path.join(out, t, f"v={v}", f"block_range={r}")
-                    for r, v in parts.items()
-                ]
-            )
-            for t, parts in m["tables"].items()
-        }
-    else:
-        status["sink"] = "plain"
-        cursor_dir = os.path.join(out, "_meta", "follower_info")
-        # Mirror CursorStore.read() (etl/pipeline.py): during the
-        # two-rename cursor swap (or after a crash between renames) the
-        # live cursor sits in follower_info.old — falling back there
-        # keeps status truthful instead of reporting null; missing
-        # both means a whole swap completed, so retry current.
-        status["height"] = None
-        status["first_block"] = None
-        for d in (cursor_dir, cursor_dir + ".old", cursor_dir):
-            try:
-                t = pq.read_table(d)
-            except (FileNotFoundError, OSError):
-                continue
-            if t.num_rows:
-                status["height"] = int(t.column("height")[0].as_py())
-                status["first_block"] = int(t.column("first_block")[0].as_py())
-                break
-        status["tables"] = {}
-        for table in ("rewards", "transactions"):
-            tdir = os.path.join(out, table)
-            if os.path.isdir(tdir):
-                parts = [
-                    os.path.join(tdir, d)
-                    for d in os.listdir(tdir)
-                    if d.startswith("block_range=")
-                ]
-                status["tables"][table] = table_stats(parts)
+    sink = open_sink(None, out)
+    state = sink.committed() or {}
+    status = {
+        "out_dir": out,
+        "sink": sink.name,
+        "height": state.get("height"),
+        "first_block": state.get("first_block"),
+        "snapshot_version": state.get("version"),
+        "tables": {t: table_stats(paths) for t, paths in sink.partitions(state).items()},
+    }
     print(json.dumps(status, indent=1, sort_keys=True))
     (log or setup_logger(cfg)).info(f"status: {status['sink']} sink at {out}")
     return status
@@ -349,28 +299,12 @@ def cmd_compact(spark, cfg, target_mb: int = 128, log=None) -> dict:
     otherwise per-partition in-place rewrite of the plain layout.
     Single-writer contract either way: don't run concurrently with the
     follower."""
-    from .etl.compact import compact_partitioned_table, compact_snapshot
-
-    log = log or setup_logger(cfg)
-    out = str(cfg["out_dir"])
-    target = int(target_mb) * 1024 * 1024
-    if bool(cfg.get("atomic", False)):
-        manifest = compact_snapshot(spark, out, target_file_bytes=target)
-        if manifest is None:
-            log.info("compact: nothing to compact (or no snapshot store)")
-            return {}
-        log.info(f"compact: published snapshot version {manifest['version']}")
-        return manifest
-    results: dict[str, dict] = {}
-    for table in ("rewards", "transactions"):
-        tdir = os.path.join(out, table)
-        if os.path.isdir(tdir):
-            r = compact_partitioned_table(spark, tdir, target_file_bytes=target)
-            if r:
-                results[table] = r
-    n = sum(len(v) for v in results.values())
-    log.info(f"compact: rewrote {n} partition(s) across {len(results)} table(s)")
-    return results
+    sink = open_sink(spark, str(cfg["out_dir"]), atomic=bool(cfg.get("atomic", False)))
+    result = sink.compact(int(target_mb) * 1024 * 1024)
+    (log or setup_logger(cfg)).info(
+        f"compact: {sink.name} sink, {'compacted' if result else 'nothing to compact'}"
+    )
+    return result
 
 
 def cmd_dedup_state(spark, state_path: str, action: str, target_mb: int = 128, log=None) -> dict:

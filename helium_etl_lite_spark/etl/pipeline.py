@@ -7,26 +7,37 @@ Differences by design (Spark-first, not a translation):
   (cursor, tip] range as ONE distributed job — partition pruning on the
   height predicate keeps it incremental, executors give parallelism.
 - Exactly-once: Postgres gives the reference a data+cursor transaction
-  (src/follower.rs:100, src/block_processor.rs:44-47). On a filesystem
-  sink we get the same end-to-end guarantee from idempotence + ordering:
-  data writes are keyed/deduped (rewards partitioned by block range,
-  overwritten per-range; transactions deduped on hash, PK analog of
-  migrations/V3:43), and the cursor is committed only AFTER data lands.
-  A crash between data and cursor replays the range — idempotent, so
-  the result converges. On Delta/Iceberg the same code path becomes a
-  single multi-table transaction.
+  (src/follower.rs:100, src/block_processor.rs:44-47). Here every
+  caller (batch follower, RPC catch-up, streaming twin, CLI, serving)
+  lands and reads a batch through ONE interface, `FollowerSink`, that
+  `open_sink` picks once. Two sinks implement it:
+  - `PlainSink` (below): plain parquet. Data writes are keyed/deduped
+    (rewards partitioned by block range, overwritten per-range;
+    transactions deduped on hash, PK analog of migrations/V3:43), and
+    the cursor is committed only AFTER data lands. A crash between
+    data and cursor replays the range — idempotent, so the result
+    converges.
+  - `SnapshotSink` (etl/snapshot.py, `atomic = true`): data and cursor
+    publish in one manifest rename, the reference's BEGIN..COMMIT made
+    literal.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import shutil
 from dataclasses import dataclass
+from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import FOLLOWER_INFO_SCHEMA, REWARDS_V2_FIELDS_SCHEMA
+from ..errors import is_path_not_found
+from .schemas import REWARDS_V2_FIELDS_SCHEMA, SENTINEL
 from .transforms import build_outputs
 
 # Output tables are partitioned by block: dynamic partition overwrite
@@ -61,7 +72,7 @@ def write_block_range_idempotent(
     reference's per-block BEGIN..COMMIT, src/follower.rs:100, at range
     granularity). Multi-partition overwrite is not atomic on plain
     parquet — a transactional table format (Delta/Iceberg) upgrades that
-    without changing this dataflow; until then read_committed() below
+    without changing this dataflow; until then PlainSink.read below
     gives readers the cursor-bounded consistent view.
 
     What counts as "claimed" matters for correctness:
@@ -150,31 +161,10 @@ def write_block_range_idempotent(
         fs.delete(hpath, True)
 
 
-def read_committed(
-    spark: SparkSession, out_dir: str, table: str = "rewards", range_size: int = 1000
-) -> DataFrame:
-    """The consistent-read view: rows at or below the committed cursor.
-
-    Data lands BEFORE the cursor advances, so between the two writes a
-    raw reader could observe blocks beyond the cursor (the reference's
-    Postgres transaction hides that window). Filtering by the cursor
-    restores the reference's visibility rule — readers never see a
-    block the follower hasn't committed — and the predicate prunes
-    `block_range` partitions, so it costs a metadata lookup, not a scan.
-    """
-    cur = CursorStore(spark, os.path.join(out_dir, "_meta", "follower_info")).read()
-    df = spark.read.parquet(os.path.join(out_dir, table))
-    if cur is None:
-        return df.where(F.lit(False))
-    height = cur[0]
-    return df.where(F.col("block_range") <= height // range_size).where(
-        F.col("block") <= height
-    )
-
-
 class CursorStore:
     """follower_info analog (reference migrations/V2, src/follower.rs:115-142):
-    single-row (height, first_block) table, persisted as parquet.
+    single-row (height, first_block) table, persisted as one parquet
+    file that pyarrow reads and writes (no Spark job, no SparkSession).
 
     Crash-safe on a local/POSIX filesystem: `overwrite` alone deletes
     the directory before rewriting it, so a crash mid-write loses the
@@ -190,18 +180,21 @@ class CursorStore:
     conditional-put of a single manifest file.)
     """
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
+    SCHEMA = pa.schema(
+        [pa.field("height", pa.int64(), False), pa.field("first_block", pa.int64(), False)]
+    )
+
+    def __init__(self, path: str):
         self.path = path
 
     def _read_dir(self, path: str) -> tuple[int, int] | None:
         try:
-            rows = self.spark.read.schema(FOLLOWER_INFO_SCHEMA).parquet(path).collect()
-        except Exception:
+            t = pq.read_table(path, schema=self.SCHEMA)
+        except (OSError, ValueError):  # no such dir, or no complete file in it
             return None
-        if not rows:
+        if not t.num_rows:
             return None
-        return rows[0]["height"], rows[0]["first_block"]
+        return t["height"][0].as_py(), t["first_block"][0].as_py()
 
     def read(self) -> tuple[int, int] | None:
         for path in (self.path, self.path + ".old", self.path):
@@ -211,17 +204,287 @@ class CursorStore:
         return None
 
     def write(self, height: int, first_block: int) -> None:
-        import shutil
-
         tmp, old = self.path + ".tmp", self.path + ".old"
         shutil.rmtree(tmp, ignore_errors=True)
-        df = self.spark.createDataFrame([(height, first_block)], FOLLOWER_INFO_SCHEMA)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        os.makedirs(tmp)
+        row = pa.table({"height": [height], "first_block": [first_block]}, schema=self.SCHEMA)
+        pq.write_table(row, os.path.join(tmp, "part-00000.parquet"))
         shutil.rmtree(old, ignore_errors=True)
         if os.path.isdir(self.path):
             os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old, ignore_errors=True)
+
+
+class FollowerSink:
+    """Where follower batches land and are read back: the one interface
+    the batch follower, the RPC catch-up, the streaming twin, the CLI
+    and serving go through, so none of them branches on the sink kind.
+    A sink owns four things:
+
+    - the committed state, read ONCE per use (`committed`): a dict
+      holding the cursor `height` and `first_block` (the snapshot
+      sink's is its whole manifest);
+    - the cursor seed at `first - 1` (`init_cursor`);
+    - one batch commit (`commit`): every table plus the cursor,
+      claiming the span [lo, hi], or exactly the height set `heights`
+      when given (see write_block_range_idempotent);
+    - the committed read of a table at a state (`read`).
+
+    Plus what the CLI's CDC and maintenance verbs need (`changes`,
+    `partitions`, `compact`). `open_sink` picks the implementation."""
+
+    name = ""
+
+    def committed(self, version: int | None = None) -> dict | None:
+        """The committed state (None before the first seed); `version`
+        time-travels a sink that keeps history."""
+        raise NotImplementedError
+
+    def commit(self, tables, lo, hi, height, first_block, heights=None) -> None:
+        """Land `tables` (name -> DataFrame) and move the cursor to
+        (height, first_block)."""
+        raise NotImplementedError
+
+    def read(self, table: str, state: dict | None, committed: bool = True) -> DataFrame:
+        """`table` as of `state`; committed=False also shows data landed
+        past the cursor, where the sink has any."""
+        raise NotImplementedError
+
+    def changes(self, state: dict | None, since: int, key_cols: list[str] | None) -> dict[str, DataFrame]:
+        """`<table>_changes` CDC views from version `since` to `state`."""
+        raise NotImplementedError
+
+    def partitions(self, state: dict) -> dict[str, list[str]]:
+        """Per table, the partition directories `state` reads."""
+        raise NotImplementedError
+
+    def compact(self, target_file_bytes: int) -> dict:
+        """Merge small files; returns what was rewritten ({} if nothing)."""
+        raise NotImplementedError
+
+    def _seed(self, height: int, first_block: int) -> None:
+        """Commit the first cursor, before any data."""
+        raise NotImplementedError
+
+    def _recover(self) -> tuple[int, int] | None:
+        """A cursor re-derived from landed data, for a lost one."""
+        return None
+
+    def cursor(self) -> tuple[int, int] | None:
+        state = self.committed()
+        return None if state is None else (state["height"], state["first_block"])
+
+    def init_cursor(self, first_of: Callable[[], int]) -> tuple[int, int]:
+        """The committed cursor; without one, a cursor recovered from
+        landed data, else a seed at first_of() - 1 — committed before
+        it is returned (reference src/follower.rs:27-41)."""
+        cur = self.cursor()
+        if cur is not None:
+            return cur
+        cur = self._recover()
+        if cur is None:
+            first = first_of()
+            # cursor starts at first-1 so the first processed block is
+            # `first` (reference src/follower.rs:37).
+            cur = (first - 1, first)
+        self._seed(*cur)
+        return cur
+
+
+class PlainSink(FollowerSink):
+    """Plain parquet: `{table}/block_range=R/` landed by
+    write_block_range_idempotent, then the cursor in
+    `_meta/follower_info` (CursorStore). The cursor is written after
+    the data, so readers cut every table at it (`read`) and a crash in
+    between replays an idempotent range. Runs the ingest audit."""
+
+    name = "plain"
+
+    def __init__(self, spark: SparkSession | None, out_dir: str, range_size: int = 1000):
+        self.spark = spark
+        self.out_dir = out_dir
+        self.range_size = range_size
+        self.store = CursorStore(os.path.join(out_dir, "_meta", "follower_info"))
+
+    def committed(self, version: int | None = None) -> dict | None:
+        if version is not None:
+            raise ValueError(
+                f"--at-version requires an atomic sink (no snapshot store "
+                f"at {self.out_dir}; plain sinks keep no history)"
+            )
+        cur = self.store.read()
+        return None if cur is None else {"height": cur[0], "first_block": cur[1]}
+
+    def _seed(self, height: int, first_block: int) -> None:
+        self.store.write(height, first_block)
+
+    def _recover(self) -> tuple[int, int] | None:
+        # Cursor lost but data landed (e.g. the pre-atomic-write store
+        # died mid-overwrite): re-derive the position from the output
+        # table instead of re-seeding at tip, which would silently skip
+        # every block between the lost cursor and the tip. Re-deriving
+        # can only UNDER-estimate (filters mode drops rewardless
+        # blocks), and replay of those blocks is idempotent.
+        try:
+            row = (
+                self.spark.read.parquet(os.path.join(self.out_dir, "rewards"))
+                .agg(F.max("block").alias("mx"), F.min("block").alias("mn"))
+                .collect()[0]
+            )
+        except Exception:
+            return None
+        if row["mx"] is None:
+            return None
+        return int(row["mx"]), int(row["mn"])
+
+    def commit(self, tables, lo, hi, height, first_block, heights=None) -> None:
+        for table, df in tables.items():
+            write_block_range_idempotent(
+                self.spark, df, os.path.join(self.out_dir, table), lo, hi,
+                self.range_size, heights=heights,
+            )
+            # A height-set claim's [lo, hi] can hold blocks other batches
+            # landed, so only a span claim audits its range.
+            if table == "rewards" and heights is None:
+                self._audit(lo, hi)
+        # cursor advances only after data is durable (E18; the ordering
+        # that substitutes for the reference's BEGIN..COMMIT).
+        self.store.write(height, first_block)
+
+    def _audit(self, lo: int, hi: int) -> None:
+        # Ingest audit: row/amount/sentinel counters for the landed
+        # range (the reference has no ingest metrics at all; production
+        # followers need them to spot a silently-empty or all-null
+        # upstream). Computed from the JUST-WRITTEN parquet slice — one
+        # cheap columnar scan with the block predicate pushed — instead
+        # of re-running the whole batch build a second time (an agg on
+        # the batch's rewards would re-execute explode/validate/join per
+        # range, ~2x ingest cost). NOT the Observation API: the recovery
+        # paths here deliberately run failing probe reads, and a pending
+        # Observation's listener asserts on ANY failed query in the
+        # session, taking the whole batch down with it.
+        try:
+            landed = (
+                self.spark.read.parquet(os.path.join(self.out_dir, "rewards"))
+                .where(F.col("block").between(lo, hi))
+            )
+            audit = landed.agg(
+                F.count(F.lit(1)).alias("n_rewards"),
+                F.coalesce(F.sum("amount"), F.lit(0)).alias("amount_total"),
+                F.coalesce(
+                    F.sum(F.when(F.col("account") == SENTINEL, 1).otherwise(0)),
+                    F.lit(0),
+                ).alias("sentinel_accounts"),
+            ).first()
+            self.last_audit = audit.asDict()
+        except AnalysisException as e:
+            # ONLY the missing-path case is a legitimate zero: a batch
+            # with zero reward rows writes no directory at all on the
+            # very first range — that IS the signal the audit exists to
+            # surface, as an explicit zero. Any other failure (corrupt
+            # footer, permission error, transient IO) must surface as
+            # an audit FAILURE, not be masked as zeros (r6 ADVICE).
+            if is_path_not_found(e):
+                self.last_audit = {
+                    "n_rewards": 0, "amount_total": 0, "sentinel_accounts": 0,
+                }
+            else:
+                self.last_audit = {"error": str(e)}
+        except Exception as e:  # noqa: BLE001 — audit is advisory; ingest continues
+            self.last_audit = {"error": str(e)}
+        logging.getLogger("helium_etl_lite_spark").log(
+            logging.WARNING if "error" in self.last_audit else logging.INFO,
+            f"audit [{lo},{hi}]: {self.last_audit}",
+        )
+
+    def read(self, table: str, state: dict | None, committed: bool = True) -> DataFrame:
+        # Data lands BEFORE the cursor advances, so between the two
+        # writes a raw reader could observe blocks beyond the cursor
+        # (the reference's Postgres transaction hides that window).
+        # Cutting at the cursor restores the reference's visibility
+        # rule, and the predicate prunes `block_range` partitions, so it
+        # costs a metadata lookup, not a scan.
+        df = self.spark.read.parquet(os.path.join(self.out_dir, table))
+        if not committed:
+            return df
+        if state is None:
+            return df.where(F.lit(False))
+        height = state["height"]
+        return df.where(F.col("block_range") <= height // self.range_size).where(
+            F.col("block") <= height
+        )
+
+    def changes(self, state, since, key_cols) -> dict[str, DataFrame]:
+        raise ValueError(
+            f"--changes-since requires an atomic sink (no snapshot store "
+            f"at {self.out_dir}; plain sinks keep no history)"
+        )
+
+    def partitions(self, state: dict) -> dict[str, list[str]]:
+        out = {}
+        for table in ("rewards", "transactions"):
+            tdir = os.path.join(self.out_dir, table)
+            if os.path.isdir(tdir):
+                out[table] = [
+                    os.path.join(tdir, d) for d in os.listdir(tdir) if d.startswith("block_range=")
+                ]
+        return out
+
+    def compact(self, target_file_bytes: int) -> dict:
+        # per-partition in-place rewrite of the plain layout
+        from .compact import compact_partitioned_table
+
+        results: dict[str, dict] = {}
+        for table in self.partitions({}):  # the tables on disk
+            got = compact_partitioned_table(
+                self.spark, os.path.join(self.out_dir, table), target_file_bytes=target_file_bytes
+            )
+            if got:
+                results[table] = got
+        return results
+
+
+def open_sink(
+    spark: SparkSession | None,
+    out_dir: str,
+    atomic: bool | None = None,
+    range_size: int = 1000,
+) -> FollowerSink:
+    """The one place that picks a sink. Writers pass `atomic`
+    (FollowerConfig.atomic); readers pass None and get the layout found
+    on disk (plain while there is none). A configured sink that
+    disagrees with the layout on disk raises ValueError: the snapshot
+    sink would seed a fresh cursor over plain files and hide them, and
+    the plain sink would read every `v=` directory of a snapshot store."""
+    from .snapshot import SnapshotSink  # snapshot.py builds on this module
+
+    found = set()
+    if os.path.isdir(os.path.join(out_dir, "_snapshots")):
+        found.add("atomic")
+    rewards = os.path.join(out_dir, "rewards")
+    if os.path.isdir(os.path.join(out_dir, "_meta")) or (
+        os.path.isdir(rewards) and any(d.startswith("block_range=") for d in os.listdir(rewards))
+    ):
+        found.add("plain")
+    name = None if atomic is None else ("atomic" if atomic else "plain")
+    configured = found if name is None else {name}
+    if len(found | configured) > 1:
+        raise ValueError(
+            f"sink mismatch at {out_dir}: configured {name or 'no'} sink, "
+            f"found {' and '.join(sorted(found))} sink on disk"
+        )
+    return (SnapshotSink if "atomic" in configured else PlainSink)(spark, out_dir, range_size)
+
+
+def sink_tables(out: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """build_outputs' tables as a sink commits them: transactions
+    deduplicated on hash within the batch (PK(hash) idempotence,
+    migrations/V3:43) before the idempotent range write."""
+    tables = {"rewards": out["rewards"]}
+    if "transactions" in out:
+        tables["transactions"] = out["transactions"].dropDuplicates(["hash"])
+    return tables
 
 
 @dataclass
@@ -233,10 +496,10 @@ class FollowerConfig:
     out_dir: str = "/tmp/helium_out"
     max_blocks_per_batch: int | None = None  # None = whole lag in one job
     block_range_size: int = 1000   # blocks per output partition directory
-    # True = snapshot-manifest sink (etl/snapshot.py): data + cursor
-    # publish in ONE atomic rename, the reference's BEGIN..COMMIT
-    # (src/follower.rs:100) made literal instead of approximated by
-    # write-ordering + idempotent replay.
+    # The sink selector, read once by open_sink: True = SnapshotSink
+    # (etl/snapshot.py), data + cursor publish in ONE atomic rename, the
+    # reference's BEGIN..COMMIT (src/follower.rs:100) made literal;
+    # False = PlainSink, write-ordering + idempotent replay.
     atomic: bool = False
 
 
@@ -262,59 +525,20 @@ class IncrementalFollower:
         self.txns = txns
         self.config = config
         self.filters = filters
-        self.cursor = CursorStore(spark, os.path.join(config.out_dir, "_meta", "follower_info"))
+        self.sink = open_sink(spark, config.out_dir, config.atomic, config.block_range_size)
+
+    @property
+    def last_audit(self) -> dict:
+        """The plain sink's ingest audit of the last landed range."""
+        return self.sink.last_audit
 
     # -- cursor init (reference src/follower.rs:27-41) ------------------
     def init_cursor(self) -> tuple[int, int]:
-        if self.config.atomic:
-            from .snapshot import SnapshotStore
-
-            m = SnapshotStore(self.config.out_dir).current()
-            if m is not None:
-                return m["height"], m["first_block"]
-            # No lost-cursor recovery path: unpublished data is invisible
-            # by construction, so the manifest IS the only truth.
-            if self.config.backfill:
-                first = get_first_block(self.spark, self.blocks, self.txns)
-            else:
-                first = self._tip()
-            SnapshotStore(self.config.out_dir).publish(
-                {"version": 1, "height": first - 1, "first_block": first, "tables": {}}
-            )
-            return first - 1, first
-        existing = self.cursor.read()
-        if existing is not None:
-            return existing
-        # Cursor lost but data landed (e.g. the pre-atomic-write store
-        # died mid-overwrite): re-derive the position from the output
-        # table instead of re-seeding at tip, which would silently skip
-        # every block between the lost cursor and the tip. Re-deriving
-        # can only UNDER-estimate (filters mode drops rewardless
-        # blocks), and replay of those blocks is idempotent.
-        recovered = self._recover_from_output()
-        if recovered is not None:
-            self.cursor.write(*recovered)
-            return recovered
-        if self.config.backfill:
-            first = get_first_block(self.spark, self.blocks, self.txns)
-        else:
-            first = self._tip()
-        # cursor starts at first-1 so the first processed block is
-        # `first` (reference src/follower.rs:37).
-        self.cursor.write(first - 1, first)
-        return first - 1, first
-
-    def _recover_from_output(self) -> tuple[int, int] | None:
-        try:
-            landed = self.spark.read.parquet(os.path.join(self.config.out_dir, "rewards"))
-            row = landed.agg(
-                F.max("block").alias("mx"), F.min("block").alias("mn")
-            ).collect()[0]
-        except Exception:
-            return None
-        if row["mx"] is None:
-            return None
-        return int(row["mx"]), int(row["mn"])
+        return self.sink.init_cursor(
+            lambda: get_first_block(self.spark, self.blocks, self.txns)
+            if self.config.backfill
+            else self._tip()
+        )
 
     def _tip(self) -> int:
         # E1: chain-tip probe (reference src/follower.rs:76).
@@ -330,14 +554,11 @@ class IncrementalFollower:
         upper = tip
         if self.config.max_blocks_per_batch is not None:
             upper = min(tip, height + self.config.max_blocks_per_batch)
-        if self.config.atomic:
-            self._commit_range_atomic(height + 1, upper, first_block)
-        else:
-            self._process_range(height + 1, upper)
-            # cursor advances only after data is durable (E18; the
-            # ordering that substitutes for the reference's
-            # BEGIN..COMMIT).
-            self.cursor.write(upper, first_block)
+        # Incremental slice: the height predicate prunes partitions at
+        # the source (src/follower.rs:86's `h > self.height`, vectorized).
+        blocks = self.blocks.where(F.col("height").between(height + 1, upper))
+        out = build_outputs(self.config.mode, blocks, self.txns, self.filters)
+        self.sink.commit(sink_tables(out), height + 1, upper, upper, first_block)
         return upper - height
 
     def catch_up(self) -> int:
@@ -348,104 +569,6 @@ class IncrementalFollower:
             if n == 0:
                 return total
             total += n
-
-    def _commit_range_atomic(self, lo: int, hi: int, first_block: int) -> None:
-        # E14-E18 as ONE transaction: every output table and the cursor
-        # advance publish together in the manifest swap.
-        from .snapshot import commit_batch_atomic
-
-        blocks = self.blocks.where(F.col("height").between(lo, hi))
-        out = build_outputs(self.config.mode, blocks, self.txns, self.filters)
-        tables = {"rewards": out["rewards"]}
-        if "transactions" in out:
-            tables["transactions"] = out["transactions"].dropDuplicates(["hash"])
-        commit_batch_atomic(
-            self.spark,
-            self.config.out_dir,
-            tables,
-            lo,
-            hi,
-            height=hi,
-            first_block=first_block,
-            range_size=self.config.block_range_size,
-        )
-
-    def _process_range(self, lo: int, hi: int) -> None:
-        # Incremental slice: the height predicate prunes partitions at
-        # the source (src/follower.rs:86's `h > self.height`, vectorized).
-        blocks = self.blocks.where(F.col("height").between(lo, hi))
-        out = build_outputs(self.config.mode, blocks, self.txns, self.filters)
-
-        write_block_range_idempotent(
-            self.spark,
-            out["rewards"],
-            os.path.join(self.config.out_dir, "rewards"),
-            lo,
-            hi,
-            self.config.block_range_size,
-        )
-
-        # Ingest audit: row/amount/sentinel counters for the landed
-        # range (the reference has no ingest metrics at all; production
-        # followers need them to spot a silently-empty or all-null
-        # upstream). Computed from the JUST-WRITTEN parquet slice — one
-        # cheap columnar scan with the block predicate pushed — instead
-        # of re-running the whole batch build a second time (an agg on
-        # out["rewards"] would re-execute explode/validate/join per
-        # range, ~2x ingest cost). NOT the Observation API: the recovery
-        # paths here deliberately run failing probe reads, and a pending
-        # Observation's listener asserts on ANY failed query in the
-        # session, taking the whole batch down with it.
-        from .schemas import SENTINEL
-
-        try:
-            landed = (
-                self.spark.read.parquet(os.path.join(self.config.out_dir, "rewards"))
-                .where(F.col("block").between(lo, hi))
-            )
-            audit = landed.agg(
-                F.count(F.lit(1)).alias("n_rewards"),
-                F.coalesce(F.sum("amount"), F.lit(0)).alias("amount_total"),
-                F.coalesce(
-                    F.sum(F.when(F.col("account") == SENTINEL, 1).otherwise(0)),
-                    F.lit(0),
-                ).alias("sentinel_accounts"),
-            ).first()
-            self.last_audit = audit.asDict()
-        except AnalysisException as e:
-            # ONLY the missing-path case is a legitimate zero: a batch
-            # with zero reward rows writes no directory at all on the
-            # very first range — that IS the signal the audit exists to
-            # surface, as an explicit zero. Any other failure (corrupt
-            # footer, permission error, transient IO) must surface as
-            # an audit FAILURE, not be masked as zeros (r6 ADVICE).
-            from ..errors import is_path_not_found
-
-            if is_path_not_found(e):
-                self.last_audit = {
-                    "n_rewards": 0, "amount_total": 0, "sentinel_accounts": 0,
-                }
-            else:
-                self.last_audit = {"error": str(e)}
-        except Exception as e:  # noqa: BLE001 — audit is advisory; ingest continues
-            self.last_audit = {"error": str(e)}
-        import logging
-
-        logging.getLogger("helium_etl_lite_spark").log(
-            logging.WARNING if "error" in self.last_audit else logging.INFO,
-            f"audit [{lo},{hi}]: {self.last_audit}",
-        )
-        if "transactions" in out:
-            # PK(hash) idempotence (migrations/V3:43): dedup within the
-            # batch before the idempotent range write.
-            write_block_range_idempotent(
-                self.spark,
-                out["transactions"].dropDuplicates(["hash"]),
-                os.path.join(self.config.out_dir, "transactions"),
-                lo,
-                hi,
-                self.config.block_range_size,
-            )
 
 
 def rpc_catch_up(
@@ -462,30 +585,10 @@ def rpc_catch_up(
     catching up from far behind."""
     from ..sources.block_source import RpcBlockSource
 
-    if config.atomic:
-        # Cursor truth lives in the snapshot manifest; the per-batch
-        # writes below go through the follower, which commits
-        # data+cursor atomically (run_once → _commit_range_atomic).
-        from .snapshot import SnapshotStore
-
-        sstore = SnapshotStore(config.out_dir)
-        m = sstore.current()
-        if m is None:
-            first = rpc_get_first_block(client) if config.backfill else client.height()
-            sstore.publish(
-                {"version": 1, "height": first - 1, "first_block": first, "tables": {}}
-            )
-            cur = (first - 1, first)
-        else:
-            cur = (m["height"], m["first_block"])
-    else:
-        store = CursorStore(spark, os.path.join(config.out_dir, "_meta", "follower_info"))
-        cur = store.read()
-        if cur is None:
-            first = rpc_get_first_block(client) if config.backfill else client.height()
-            store.write(first - 1, first)  # cursor = first-1 (src/follower.rs:37)
-            cur = (first - 1, first)
-    height, _first = cur
+    sink = open_sink(spark, config.out_dir, config.atomic, config.block_range_size)
+    height, _first = sink.init_cursor(
+        lambda: rpc_get_first_block(client) if config.backfill else client.height()
+    )
     total = 0
     tip = client.height()
     while tip > height:

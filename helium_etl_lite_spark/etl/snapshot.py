@@ -6,7 +6,7 @@ writes rewards/transactions AND advances follower_info together
 (src/follower.rs:100, src/block_processor.rs:44-47). The plain-parquet
 sink orders data-write → cursor-write and relies on idempotent replay,
 which leaves a window where a RAW reader sees data ahead of the cursor
-(read_committed() masks it). This module closes that window the way
+(PlainSink.read masks it). This module closes that window the way
 modern lakehouse formats do (Delta's _delta_log, Iceberg's metadata
 pointer), scaled down to exactly what the follower needs:
 
@@ -36,6 +36,10 @@ pointer), scaled down to exactly what the follower needs:
   orphaned, invisible, and overwritten by the replay, which recomputes
   the same version number. Crash after the swap is a completed commit.
 
+`SnapshotSink` (bottom) is this format behind the follower's sink
+interface (etl/pipeline.py FollowerSink): each batch is one
+commit_batch_atomic, and the manifest is the committed state.
+
 Replay convergence, crash atomicity and metadata-deletes are pinned by
 tests/test_snapshot.py.
 
@@ -53,8 +57,11 @@ import os
 import shutil
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .pipeline import FollowerSink
 
 
 class ConcurrentSnapshotWriteError(RuntimeError):
@@ -264,9 +271,13 @@ def read_snapshot(
     not in the manifest, so it does not exist for readers."""
     store = SnapshotStore(root)
     manifest = store.current() if version is None else store.manifest(version)
-    if manifest is None or table not in manifest["tables"]:
-        return None
-    parts = manifest["tables"][table]
+    return _read_manifest_table(spark, root, manifest, table)
+
+
+def _read_manifest_table(
+    spark: SparkSession, root: str, manifest: dict | None, table: str
+) -> DataFrame | None:
+    parts = (manifest or {}).get("tables", {}).get(table)
     if not parts:
         return None
     by_version: dict[int, list[int]] = {}
@@ -399,7 +410,7 @@ def pair_updates(feed: DataFrame, key_cols: list[str]) -> DataFrame:
     key present on BOTH sides changed in place — tag its old image
     'update_preimage' and its new one 'update_postimage'; one-sided
     keys keep their plain tags. Shared by read_changes(key_cols=) and
-    serving.register_views(change_key_cols=), which re-tags an
+    SnapshotSink.changes (serving's change_key_cols=), which re-tags an
     already-built diff instead of rebuilding it (review find).
 
     The key sets are the O(churn) feed's keys — bounded, so the
@@ -560,3 +571,78 @@ def commit_batch_atomic(
     }
     store.publish(manifest)
     return manifest
+
+
+class SnapshotSink(FollowerSink):
+    """The follower's transactional sink (`atomic = true`): each batch
+    is one commit_batch_atomic, landing every table and the cursor in
+    one manifest swap; the manifest is the committed state."""
+
+    name = "atomic"
+
+    def __init__(self, spark: SparkSession | None, out_dir: str, range_size: int = 1000):
+        self.spark = spark
+        self.out_dir = out_dir
+        self.range_size = range_size
+        self.store = SnapshotStore(out_dir)
+
+    def committed(self, version: int | None = None) -> dict | None:
+        if version is None:
+            return self.store.current()
+        manifest = self.store.manifest(version)
+        if manifest is None:
+            raise ValueError(
+                f"no snapshot version {version} at {self.out_dir} (vacuumed or never committed)"
+            )
+        return manifest
+
+    def _seed(self, height: int, first_block: int) -> None:
+        # No lost-cursor recovery path: unpublished data is invisible
+        # by construction, so the manifest IS the only truth.
+        self.store.publish(
+            {"version": 1, "height": height, "first_block": first_block, "tables": {}}
+        )
+
+    def commit(self, tables, lo, hi, height, first_block, heights=None) -> None:
+        commit_batch_atomic(
+            self.spark, self.out_dir, tables, lo, hi, height=height,
+            first_block=first_block, range_size=self.range_size, heights=heights,
+        )
+
+    def read(self, table: str, state: dict | None, committed: bool = True) -> DataFrame:
+        # The manifest IS the committed view: uncommitted data isn't
+        # reachable from it at all, so there is no tail to cut or show.
+        df = _read_manifest_table(self.spark, self.out_dir, state, table)
+        if df is None:
+            raise AnalysisException(
+                f"[PATH_NOT_FOUND] no committed snapshot entry for table {table}"
+            )
+        return df
+
+    def changes(self, state, since, key_cols) -> dict[str, DataFrame]:
+        views = {}
+        for table in state["tables"]:
+            diff = read_changes(self.spark, self.out_dir, table, since, state["version"])
+            if diff is None:
+                continue
+            if key_cols and all(k in diff.columns for k in key_cols):
+                # re-tag the diff already built — pair_updates operates
+                # on the feed itself, so no second manifest/diff pass
+                diff = pair_updates(diff, key_cols)
+            views[f"{table}_changes"] = diff
+        return views
+
+    def partitions(self, state: dict) -> dict[str, list[str]]:
+        return {
+            table: [
+                os.path.join(self.out_dir, table, f"v={v}", f"block_range={r}")
+                for r, v in parts.items()
+            ]
+            for table, parts in state.get("tables", {}).items()
+        }
+
+    def compact(self, target_file_bytes: int) -> dict:
+        # committed partitions only, via a new snapshot version
+        from .compact import compact_snapshot
+
+        return compact_snapshot(self.spark, self.out_dir, target_file_bytes=target_file_bytes) or {}

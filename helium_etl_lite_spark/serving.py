@@ -15,10 +15,12 @@ patterns each reference index was built for:
 | transactions_pkey (V3:43)         | transaction_by_hash         |
 | transaction_type/block (V3:46-47) | transactions_by_type        |
 
-Consistency: by default views are registered over read_committed(), so
-a query never observes blocks past the follower's cursor — the same
-isolation the reference gets from Postgres transactions. Pass
-committed=False for raw (uncommitted-tail-visible) reads.
+Consistency: the views come from the follower's sink (etl/pipeline.py
+open_sink, by the layout on disk), cut at ONE read of its committed
+state, so a query never observes blocks past the follower's cursor —
+the same isolation the reference gets from Postgres transactions — and
+all three views agree on where that cursor is. Pass committed=False for
+raw (uncommitted-tail-visible) reads of a plain sink.
 
 Scale: the views are plain partitioned parquet; block predicates prune
 `block_range` directories, gateway/type predicates push to parquet row
@@ -27,12 +29,12 @@ groups — the B-tree indexes' job, done by layout + pushdown instead.
 
 from __future__ import annotations
 
-import os
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .etl.pipeline import CursorStore, read_committed
+from .errors import is_path_not_found
+from .etl.pipeline import open_sink
 from .etl.schemas import FOLLOWER_INFO_SCHEMA
 
 SENTINEL = "1Wh4bh"
@@ -60,87 +62,30 @@ def register_views(
     changes of a key pair as update_preimage/update_postimage (the
     Delta-CDF contract; tables missing a key column keep the plain
     feed — a shared key list serves heterogeneous stores)."""
-    views: dict[str, DataFrame] = {}
-
-    from .etl.snapshot import SnapshotStore, read_changes, read_snapshot
-
-    store = SnapshotStore(out_dir)
-    snapshot_manifest = (
-        store.current() if at_version is None else store.manifest(at_version)
+    sink = open_sink(spark, out_dir, range_size=range_size)
+    # ONE read of the committed state; every view is cut at it, so a
+    # commit landing mid-registration cannot tear the views apart.
+    state = sink.committed(at_version)
+    # before any table read, so a sink without history refuses
+    # --changes-since even where it has no tables yet
+    changes = {} if changes_since is None else sink.changes(
+        state, changes_since, change_key_cols
     )
-    # --changes-since needs a snapshot STORE; check store existence
-    # (current_version), not the resolved manifest — otherwise a
-    # missing --at-version manifest would be misreported as "no
-    # snapshot store" before the accurate at_version diagnostics below
-    # run (review find).
-    if changes_since is not None and store.current_version() is None:
-        raise ValueError(
-            f"--changes-since requires an atomic sink (no snapshot "
-            f"store at {out_dir}; plain sinks keep no history)"
-        )
-    if at_version is not None and snapshot_manifest is None:
-        if store.current_version() is None:
-            raise ValueError(
-                f"--at-version requires an atomic sink (no snapshot store "
-                f"at {out_dir}; plain sinks keep no history)"
-            )
-        raise ValueError(
-            f"no snapshot version {at_version} at {out_dir} (vacuumed or never committed)"
-        )
-
-    def load(table: str) -> DataFrame:
-        if snapshot_manifest is not None:
-            # Atomic-sink output: the manifest IS the committed view —
-            # uncommitted data isn't reachable from it at all, so no
-            # cursor filter is needed (or meaningful).
-            df = read_snapshot(spark, out_dir, table, version=at_version)
-            if df is None:
-                from pyspark.errors import AnalysisException
-
-                raise AnalysisException(
-                    f"[PATH_NOT_FOUND] no committed snapshot entry for table {table}"
-                )
-            return df
-        if committed:
-            return read_committed(spark, out_dir, table, range_size)
-        return spark.read.parquet(os.path.join(out_dir, table))
-
-    views["rewards"] = load("rewards")
+    views = {"rewards": sink.read("rewards", state, committed)}
     # Only a missing table path means "mode produced no transactions";
     # any other failure (corrupt files, bad out_dir, cursor errors) must
     # surface, not silently drop the view (ADVICE r2).
-    from pyspark.errors import AnalysisException
-
     try:
-        views["transactions"] = load("transactions")
+        views["transactions"] = sink.read("transactions", state, committed)
     except AnalysisException as exc:
-        from .errors import is_path_not_found
-
         if not is_path_not_found(exc):
             raise
         # rewards/filters mode: no transactions table
-    if snapshot_manifest is not None:
-        cur = (snapshot_manifest["height"], snapshot_manifest["first_block"])
-    else:
-        cur = CursorStore(spark, os.path.join(out_dir, "_meta", "follower_info")).read()
     views["follower_info"] = spark.createDataFrame(
-        [cur] if cur is not None else [], FOLLOWER_INFO_SCHEMA
+        [] if state is None else [(state["height"], state["first_block"])],
+        FOLLOWER_INFO_SCHEMA,
     )
-    if changes_since is not None:
-        from .etl.snapshot import pair_updates
-
-        v_to = snapshot_manifest["version"]
-        for table in snapshot_manifest["tables"]:
-            diff = read_changes(spark, out_dir, table, changes_since, v_to)
-            if diff is None:
-                continue
-            if change_key_cols and all(
-                k in diff.columns for k in change_key_cols
-            ):
-                # re-tag the diff already built — pair_updates operates
-                # on the feed itself, so no second manifest/diff pass
-                diff = pair_updates(diff, change_key_cols)
-            views[f"{table}_changes"] = diff
+    views.update(changes)
     for name, df in views.items():
         df.createOrReplaceTempView(name)
     return views

@@ -10,13 +10,13 @@ transform functions are the SAME ones the batch follower uses
 (etl/transforms.py) — foreachBatch hands us a batch DataFrame, so batch
 and streaming stay semantically identical by construction.
 
-Exactly-once, two recipes:
-- default: checkpoint offsets + IDEMPOTENT sink (per-height-set
-  replace + hash dedup) — replay converges. The standard Spark recipe.
-- config.atomic: checkpoint offsets + TRANSACTIONAL sink — each
-  micro-batch is one snapshot-manifest swap landing data and cursor
-  together (etl/snapshot.py), the foreachBatch analog of writing to
-  Delta with txnAppId/txnVersion.
+Exactly-once: checkpoint offsets + the follower's sink (etl/pipeline.py
+open_sink, chosen by config.atomic). Each micro-batch is one sink
+commit of its tables plus the cursor, claiming exactly its height set:
+on the plain sink an IDEMPOTENT per-height-set replace + hash dedup
+that a replay converges on (the standard Spark recipe); on the
+snapshot sink one manifest swap landing data and cursor together, the
+foreachBatch analog of writing to Delta with txnAppId/txnVersion.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..etl.pipeline import CursorStore, FollowerConfig, write_block_range_idempotent
+from ..etl.pipeline import FollowerConfig, open_sink, sink_tables
 from ..etl.schemas import BLOCK_SCHEMA
 from ..etl.transforms import build_outputs
 
@@ -46,7 +46,7 @@ def start_block_stream(
     reference's 10 s tick (src/main.rs:55) maps to
     trigger(processingTime='10 seconds').
     """
-    cursor = CursorStore(spark, os.path.join(config.out_dir, "_meta", "follower_info"))
+    sink = open_sink(spark, config.out_dir, config.atomic, config.block_range_size)
 
     def process_batch(batch_blocks: DataFrame, batch_id: int) -> None:
         if batch_blocks.isEmpty():
@@ -63,61 +63,16 @@ def start_block_stream(
         # grouped by listing order): a batch holding heights {100, 300}
         # must replace exactly those heights, not the whole [100, 300]
         # span — a span-delete would wipe blocks another batch already
-        # committed. So the idempotent write replaces per height SET.
+        # committed. So the commit claims the height SET.
         heights = batch_blocks.select(F.col("height").alias("block"))
-        if config.atomic:
-            # Exactly-once via transaction instead of idempotence: the
-            # checkpoint replays a failed micro-batch, and the snapshot
-            # sink makes the replayed commit a single manifest swap that
-            # lands data + cursor together (etl/snapshot.py). The cursor
-            # only moves forward — a replayed old batch re-lands its
-            # data but cannot regress the height.
-            from ..etl.snapshot import SnapshotStore, commit_batch_atomic
-
-            m = SnapshotStore(config.out_dir).current()
-            first_block = m["first_block"] if m else lo
-            new_height = max(tip, m["height"]) if m else tip
-            tables = {"rewards": out["rewards"]}
-            if "transactions" in out:
-                tables["transactions"] = out["transactions"].dropDuplicates(["hash"])
-            commit_batch_atomic(
-                spark,
-                config.out_dir,
-                tables,
-                lo,
-                tip,
-                height=new_height,
-                first_block=first_block,
-                range_size=config.block_range_size,
-                heights=heights,
-            )
-            return
-        write_block_range_idempotent(
-            spark,
-            out["rewards"],
-            os.path.join(config.out_dir, "rewards"),
-            lo,
-            tip,
-            config.block_range_size,
-            heights=heights,
-        )
-        if "transactions" in out:
-            write_block_range_idempotent(
-                spark,
-                out["transactions"].dropDuplicates(["hash"]),
-                os.path.join(config.out_dir, "transactions"),
-                lo,
-                tip,
-                config.block_range_size,
-                heights=heights,
-            )
-        # cursor bump after data is durable (E18). first_block = the
-        # first block actually processed (the batch MIN on the first
-        # batch — reference src/follower.rs:35-39), never the tip.
-        prev = cursor.read()
-        first_block = prev[1] if prev else lo
-        if prev is None or tip > prev[0]:
-            cursor.write(tip, first_block)
+        # The cursor only moves forward: the checkpoint replays a failed
+        # micro-batch, which re-lands its data but cannot regress the
+        # height. first_block = the first block actually processed (the
+        # batch MIN on the first batch — reference
+        # src/follower.rs:35-39), never the tip.
+        cur = sink.cursor()
+        height, first_block = (max(tip, cur[0]), cur[1]) if cur else (tip, lo)
+        sink.commit(sink_tables(out), lo, tip, height, first_block, heights=heights)
 
     stream = (
         spark.readStream.schema(BLOCK_SCHEMA)

@@ -109,6 +109,16 @@ def test_sql_command_over_serving_views(spark, chain_dirs, tmp_path, capsys):
     assert len(printed.splitlines()) == 6
 
 
+def _recommit_whole_span(f, first_block):
+    # Re-land blocks 1000..1059 through the follower's own sink: on an
+    # atomic sink that is one new snapshot version owning every range.
+    from helium_etl_lite_spark.etl.pipeline import sink_tables
+    from helium_etl_lite_spark.etl.transforms import build_outputs
+
+    tables = sink_tables(build_outputs(f.config.mode, f.blocks, f.txns))
+    f.sink.commit(tables, 1000, 1059, 1059, first_block)
+
+
 def test_atomic_once_and_vacuum(spark, chain_dirs, tmp_path):
     # once with atomic=true lands through the snapshot sink; a forced
     # re-commit supersedes v2 and `vacuum --keep-versions 1` reclaims it.
@@ -127,10 +137,7 @@ def test_atomic_once_and_vacuum(spark, chain_dirs, tmp_path):
     assert m is not None and m["height"] == 1059
     rows_before = read_snapshot(spark, out, "rewards").count()
     # replay the whole span: same data, new version owning every range
-    from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
-
-    f = cli._follower(spark, cfg)
-    f._commit_range_atomic(1000, 1059, m["first_block"])
+    _recommit_whole_span(cli._follower(spark, cfg), m["first_block"])
     assert store.current()["version"] == m["version"] + 1
     removed = cli.cmd_vacuum({"out_dir": out}, keep_versions=1)
     assert any("v=" in p for p in removed)
@@ -307,8 +314,7 @@ def test_sql_at_version_time_travels_atomic_sink(spark, chain_dirs, tmp_path, ca
     cli.cmd_once(spark, cfg)
     v1 = SnapshotStore(out).current()["version"]
     n_v1 = cli.cmd_sql(spark, cfg, "SELECT COUNT(*) AS n FROM rewards")
-    f = cli._follower(spark, cfg)
-    f._commit_range_atomic(1000, 1059, SnapshotStore(out).current()["first_block"])
+    _recommit_whole_span(cli._follower(spark, cfg), SnapshotStore(out).current()["first_block"])
     capsys.readouterr()
     n_tt = cli.cmd_sql(
         spark, cfg, "SELECT block, gateway FROM rewards ORDER BY block", at_version=v1

@@ -2,8 +2,8 @@
 
 write() renames current -> .old, promotes .tmp -> current, then deletes
 .old. These tests replay reader/writer interleavings deterministically
-by substituting CursorStore._read_dir, so no Spark job runs except in
-the round-trip test.
+by substituting CursorStore._read_dir; the round trip reads and writes
+real files. The store uses pyarrow, so no test here needs Spark.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ from helium_etl_lite_spark.etl.pipeline import CursorStore
 def _store(script):
     """A CursorStore whose directory reads replay `script`: one
     (expected_path_suffix, result) pair per call, in order."""
-    store = CursorStore(spark=None, path="/cursor/follower_info")
+    store = CursorStore(path="/cursor/follower_info")
     calls = []
 
     def fake_read_dir(path):
@@ -54,8 +54,8 @@ def test_no_cursor_is_none():
     assert store.read() is None
 
 
-def test_write_then_read_round_trip(spark, tmp_path):
-    store = CursorStore(spark, str(tmp_path / "follower_info"))
+def test_write_then_read_round_trip(tmp_path):
+    store = CursorStore(str(tmp_path / "follower_info"))
     assert store.read() is None
     store.write(120, 100)
     store.write(140, 100)

@@ -4,14 +4,10 @@ backfill epoch walk; streaming twin equivalence."""
 
 from __future__ import annotations
 
-import pytest
-
-# r15 heavy lane: follower-pipeline integration (133 s) on the r15 sandbox — runs with
-# SPARK_GRAFT_TEST_LANE=full (or -m heavy); see tests/conftest.py.
-pytestmark = pytest.mark.heavy
-
 import json
 import os
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -22,6 +18,7 @@ from helium_etl_lite_spark.etl.pipeline import (
     IncrementalFollower,
     backfill_epoch_walk,
     get_first_block,
+    rpc_catch_up,
 )
 from helium_etl_lite_spark.etl.schemas import SENTINEL
 
@@ -36,6 +33,10 @@ def filters(spark):
     return fixtures.make_filters(spark)
 
 
+# Heavy lane (SPARK_GRAFT_TEST_LANE=full, or -m heavy; see tests/conftest.py):
+# the follower-pipeline integration classes. The sink contract —
+# replay, cursor crash safety, layout checks — runs in the default lane.
+@pytest.mark.heavy
 class TestTransforms:
     def test_rewards_mode_semantics(self, spark, chain):
         blocks, txns = chain
@@ -120,13 +121,14 @@ class TestTransforms:
 
 
 class TestFollower:
+    @pytest.mark.heavy
     def test_catch_up_and_cursor(self, spark, chain, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=str(tmp_path / "out"))
         f = IncrementalFollower(spark, blocks, txns, cfg)
         n = f.catch_up()
         assert n == 120
-        height, first = f.cursor.read()
+        height, first = f.sink.cursor()
         assert first == 1000
         assert height == 1119  # tip
         # second pass is a no-op (cursor at tip)
@@ -140,11 +142,12 @@ class TestFollower:
         f.catch_up()
         expected = spark.read.parquet(os.path.join(out_dir, "rewards")).count()
         # simulate crash-after-data-before-cursor: rewind cursor, rerun
-        f.cursor.write(1059, 1000)
+        f.sink.store.write(1059, 1000)
         assert f.catch_up() == 60
         got = spark.read.parquet(os.path.join(out_dir, "rewards")).count()
         assert got == expected  # replay replaced, never duplicated
 
+    @pytest.mark.heavy
     def test_bounded_batches(self, spark, chain, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(
@@ -153,9 +156,10 @@ class TestFollower:
         )
         f = IncrementalFollower(spark, blocks, txns, cfg)
         assert f.run_once() == 50
-        assert f.cursor.read()[0] == 1049
+        assert f.sink.cursor()[0] == 1049
         assert f.catch_up() == 70
 
+    @pytest.mark.heavy
     def test_no_backfill_starts_at_tip(self, spark, chain, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(mode="rewards", backfill=False, out_dir=str(tmp_path / "out"))
@@ -163,6 +167,7 @@ class TestFollower:
         height, first = f.init_cursor()
         assert first == 1119 and height == 1118  # cursor = first-1
 
+    @pytest.mark.heavy
     def test_backfill_discovery(self, spark, chain):
         blocks, txns = chain
         assert get_first_block(spark, blocks, txns) == 1000
@@ -173,6 +178,7 @@ class TestFollower:
         assert oldest >= 1000
 
 
+@pytest.mark.heavy
 class TestStreamingTwin:
     def test_stream_matches_batch(self, spark, chain, tmp_path):
         from helium_etl_lite_spark.streaming.ingest import start_block_stream
@@ -194,10 +200,11 @@ class TestStreamingTwin:
             want.select("block", "account", "gateway", "amount", "type")
         ).count() == 0
         # cursor reached the tip
-        cur = CursorStore(spark, os.path.join(out_dir, "_meta", "follower_info")).read()
+        cur = CursorStore(os.path.join(out_dir, "_meta", "follower_info")).read()
         assert cur[0] == 1119
 
 
+@pytest.mark.heavy
 class TestRangeIdempotentWriter:
     def _df(self, spark, blocks):
         return spark.createDataFrame([(b, b * 10.0) for b in blocks], "block long, v double")
@@ -285,7 +292,7 @@ class TestCursorCrashSafety:
         # cursor: simulate the crash between the two renames (current
         # already moved to .old, tmp not yet published).
         path = str(tmp_path / "cur")
-        store = CursorStore(spark, path)
+        store = CursorStore(path)
         store.write(100, 1)
         store.write(200, 1)
         assert store.read() == (200, 1)
@@ -316,16 +323,14 @@ class TestCursorCrashSafety:
         # the true first block (rewardless head) — replay covers the tail.
         assert 1000 <= height <= 1119 and 1000 <= first <= height
         assert f2.catch_up() == 1119 - height  # replays only the tail
-        assert f2.cursor.read()[0] == 1119
+        assert f2.sink.cursor()[0] == 1119
         after = spark.read.parquet(os.path.join(out_dir, "rewards")).count()
         assert after == before  # replay converged, no dupes, no gap
 
-    def test_readers_never_see_past_cursor(self, spark, chain, tmp_path):
+    def test_readers_never_see_past_cursor(self, spark, chain, tmp_path, monkeypatch):
         # Kill-between-writes: data for (cursor, tip] is durable but the
-        # cursor bump never happened. read_committed must keep showing
-        # the pre-crash snapshot; after replay+bump the rows appear.
-        from helium_etl_lite_spark.etl.pipeline import read_committed
-
+        # cursor bump never happened. The committed read must keep
+        # showing the pre-crash snapshot; after replay+bump the rows appear.
         blocks, txns = chain
         out_dir = str(tmp_path / "out")
         cfg = FollowerConfig(
@@ -333,21 +338,102 @@ class TestCursorCrashSafety:
         )
         f = IncrementalFollower(spark, blocks, txns, cfg)
         assert f.run_once() == 60  # blocks 1000..1059 committed
-        committed_before = read_committed(spark, out_dir).count()
+
+        def committed():
+            return f.sink.read("rewards", f.sink.committed())
+
+        committed_before = committed().count()
         assert committed_before > 0
-        # simulate the crash: land the next range's data WITHOUT the
-        # cursor write
-        f._process_range(1060, 1119)
+        # simulate the crash: the next range's data lands, then the
+        # cursor write dies
+        def crash(self, height, first_block):
+            raise RuntimeError("crash before the cursor write")
+
+        monkeypatch.setattr(CursorStore, "write", crash)
+        with pytest.raises(RuntimeError, match="crash before the cursor write"):
+            f.run_once()
+        monkeypatch.undo()
         raw = spark.read.parquet(os.path.join(out_dir, "rewards"))
         assert raw.where(F.col("block") > 1059).count() > 0  # data visible raw
-        got = read_committed(spark, out_dir)
+        got = committed()
         assert got.count() == committed_before  # but not to committed readers
         assert got.where(F.col("block") > 1059).count() == 0
         # replay converges and publishes
         assert f.catch_up() == 60
-        assert read_committed(spark, out_dir).where(F.col("block") > 1059).count() > 0
+        assert committed().where(F.col("block") > 1059).count() > 0
+
+    def test_rpc_catch_up_recovers_lost_cursor(self, spark, chain, tmp_path):
+        # The RPC catch-up seeds its cursor through the same sink init as
+        # the follower, so a lost plain cursor is re-derived from the
+        # landed data, not re-seeded at the tip (which would skip every
+        # block between them and forget first_block).
+        import shutil
+
+        from helium_etl_lite_spark.sources.block_source import FakeRpcClient
+
+        blocks, txns = chain
+        blocks_by_h = {
+            r["height"]: {
+                "height": r["height"],
+                "time": r["time"],
+                "hash": r["hash"],
+                "transactions": [
+                    {"type": t["type"], "hash": t["hash"]} for t in r["transactions"]
+                ],
+            }
+            for r in blocks.collect()
+        }
+        txns_by_hash = {r["hash"]: json.loads(r["fields"]) for r in txns.collect()}
+        out_dir = str(tmp_path / "rpc_out")
+        early = FakeRpcClient(
+            {h: b for h, b in blocks_by_h.items() if h <= 1079}, txns_by_hash
+        )
+        cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
+        assert rpc_catch_up(spark, early, cfg) == 80
+        landed = spark.read.parquet(os.path.join(out_dir, "rewards"))
+        last_reward, first_reward = landed.agg(F.max("block"), F.min("block")).first()
+        assert last_reward < 1079  # rewardless tail: recovery under-estimates
+        shutil.rmtree(os.path.join(out_dir, "_meta", "follower_info"))
+
+        client = FakeRpcClient(blocks_by_h, txns_by_hash)  # tip 1119
+        cfg_tip = FollowerConfig(mode="rewards", backfill=False, out_dir=out_dir)
+        assert rpc_catch_up(spark, client, cfg_tip) == 1119 - last_reward
+        cur = IncrementalFollower(spark, blocks, txns, cfg_tip).sink.cursor()
+        assert cur == (1119, first_reward)
+        got = spark.read.parquet(os.path.join(out_dir, "rewards"))
+        want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
+        assert got.where(F.col("block") == 1110).count() > 0
+        assert got.count() == want.count()
 
 
+class TestSinkLayout:
+    # The configured sink must match the layout already on disk: the
+    # snapshot sink over plain files would seed a fresh manifest that
+    # hides them, the plain sink over a snapshot store would read every
+    # `v=` directory as one table.
+
+    def test_atomic_config_over_plain_layout_raises(self, spark, tmp_path):
+        blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=40)
+        out_dir = str(tmp_path / "out")
+        cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
+        IncrementalFollower(spark, blocks, txns, cfg).catch_up()
+        atomic = FollowerConfig(mode="rewards", out_dir=out_dir, atomic=True)
+        with pytest.raises(ValueError, match="configured atomic sink, found plain sink"):
+            IncrementalFollower(spark, blocks, txns, atomic).run_once()
+        assert not os.path.exists(os.path.join(out_dir, "_snapshots"))
+
+    def test_plain_config_over_snapshot_layout_raises(self, spark, tmp_path):
+        blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=40)
+        out_dir = str(tmp_path / "out")
+        atomic = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir, atomic=True)
+        IncrementalFollower(spark, blocks, txns, atomic).catch_up()
+        cfg = FollowerConfig(mode="rewards", out_dir=out_dir)
+        with pytest.raises(ValueError, match="configured plain sink, found atomic sink"):
+            IncrementalFollower(spark, blocks, txns, cfg).run_once()
+        assert not os.path.exists(os.path.join(out_dir, "_meta"))
+
+
+@pytest.mark.heavy
 class TestFailStopParity:
     def test_missing_rewards_payload_aborts_batch(self, spark):
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=120)
@@ -369,6 +455,7 @@ class TestFailStopParity:
             out.collect()
 
 
+@pytest.mark.heavy
 class TestStaleRangeDeletion:
     # ADVICE r2 (medium): dynamic partition overwrite only rewrites
     # partitions present in `merged` — a touched range whose rows are
@@ -417,6 +504,7 @@ class TestStaleRangeDeletion:
         assert os.path.exists(os.path.join(path, "block_range=1"))
 
 
+@pytest.mark.heavy
 def test_ingest_audit_rides_the_landing_action(spark, tmp_path):
     # Observation metrics must reflect exactly the landed batch — no
     # extra job, no approximation — including the sentinel-account count

@@ -12,18 +12,16 @@ output (chain fixtures → follower → parquet tables → Spark SQL).
 
 from __future__ import annotations
 
-import pytest
-
-# r15 heavy lane: serving-view integration (69 s) on the r15 sandbox — runs with
-# SPARK_GRAFT_TEST_LANE=full (or -m heavy); see tests/conftest.py.
-pytestmark = pytest.mark.heavy
-
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from helium_etl_lite_spark.etl import fixtures
-from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
+from helium_etl_lite_spark.etl.pipeline import CursorStore, FollowerConfig, IncrementalFollower
+
+# Heavy lane (SPARK_GRAFT_TEST_LANE=full, or -m heavy; see tests/conftest.py):
+# serving-view integration. The one-cursor-read contract runs by default.
 
 SENTINEL = "1Wh4bh"
 
@@ -43,6 +41,7 @@ def served(spark, tmp_path_factory):
     return rewards, transactions, out_dir
 
 
+@pytest.mark.heavy
 def test_block_range_scan_per_epoch_sums(spark, served):
     rewards, _, _ = served
     out = spark.sql(
@@ -56,6 +55,7 @@ def test_block_range_scan_per_epoch_sums(spark, served):
     assert all(r["total"] > 0 for r in out)
 
 
+@pytest.mark.heavy
 def test_per_gateway_earnings_topk(spark, served):
     rewards, _, _ = served
     top = (
@@ -70,6 +70,7 @@ def test_per_gateway_earnings_topk(spark, served):
     assert top[0]["earned"] >= top[-1]["earned"]
 
 
+@pytest.mark.heavy
 def test_txn_point_lookup_by_hash(spark, served):
     _, transactions, _ = served
     some = transactions.limit(1).collect()[0]
@@ -78,6 +79,7 @@ def test_txn_point_lookup_by_hash(spark, served):
     assert got[0]["type"] == some["type"]
 
 
+@pytest.mark.heavy
 def test_type_slice_with_json_extraction(spark, served):
     _, transactions, _ = served
     pays = spark.sql(
@@ -93,6 +95,7 @@ def test_type_slice_with_json_extraction(spark, served):
     assert all(r["payer"] is not None and r["amount"] is not None for r in rows)
 
 
+@pytest.mark.heavy
 def test_sentinel_rows_present_in_early_epoch(spark, served):
     rewards, _, _ = served
     # README.md:108-111 shape: early-epoch account-aggregated rewards
@@ -103,6 +106,7 @@ def test_sentinel_rows_present_in_early_epoch(spark, served):
     assert early.count() > 0
 
 
+@pytest.mark.heavy
 class TestServingModule:
     def test_register_views_and_helpers(self, spark, served, tmp_path_factory):
         from helium_etl_lite_spark import serving
@@ -131,7 +135,7 @@ class TestServingModule:
         got = rv2.select("field").first()
         assert got["field"] is not None and got["field"].isdigit()
 
-    def test_committed_views_hide_uncommitted_tail(self, spark, tmp_path):
+    def test_committed_views_hide_uncommitted_tail(self, spark, tmp_path, monkeypatch):
         from helium_etl_lite_spark import serving
         from helium_etl_lite_spark.etl import fixtures
 
@@ -143,7 +147,14 @@ class TestServingModule:
                            max_blocks_per_batch=30),
         )
         assert f.run_once() == 30  # commits 1000..1029
-        f._process_range(1030, 1059)  # data landed, cursor NOT bumped
+
+        def crash(self, height, first_block):
+            raise RuntimeError("crash before the cursor write")
+
+        monkeypatch.setattr(CursorStore, "write", crash)
+        with pytest.raises(RuntimeError, match="crash before the cursor write"):
+            f.run_once()  # data for 1030..1059 landed, cursor NOT bumped
+        monkeypatch.undo()
         serving.register_views(spark, out_dir)
         assert spark.sql(
             "SELECT COUNT(*) AS n FROM rewards WHERE block > 1029"
@@ -154,6 +165,7 @@ class TestServingModule:
         ).first()["n"] > 0  # raw view: visible
 
 
+@pytest.mark.heavy
 def test_register_views_raises_on_corrupt_transactions(spark, tmp_path):
     # ADVICE r2: only a MISSING transactions table means "mode produced
     # none" — a corrupt table must raise, not silently drop the view.
@@ -176,3 +188,27 @@ def test_register_views_raises_on_corrupt_transactions(spark, tmp_path):
     with pytest.raises(Exception) as exc_info:
         serving.register_views(spark, out_dir)
     assert "PATH_NOT_FOUND" not in str(exc_info.value)
+
+
+def test_register_views_cuts_every_view_at_one_cursor_read(spark, tmp_path, monkeypatch):
+    # A commit landing while the views are registered must not tear
+    # them: the cursor is read once and rewards, transactions and
+    # follower_info are all cut at that height. The substituted reader
+    # reports a higher cursor on every call, as if the follower
+    # committed between reads.
+    from helium_etl_lite_spark import serving
+
+    blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
+    out_dir = str(tmp_path / "out")
+    IncrementalFollower(
+        spark, blocks, txns,
+        FollowerConfig(mode="full", backfill=True, out_dir=out_dir, block_range_size=20),
+    ).catch_up()
+    heights = iter([1019, 1049, 1059, 1059, 1059])
+    monkeypatch.setattr(CursorStore, "_read_dir", lambda self, path: (next(heights), 1000))
+    views = serving.register_views(spark, out_dir, range_size=20)
+    (cut,) = [r["height"] for r in views["follower_info"].collect()]
+    assert cut == 1019
+    for table in ("rewards", "transactions"):
+        raw = spark.read.parquet(os.path.join(out_dir, table))
+        assert views[table].count() == raw.where(F.col("block") <= cut).count(), table

@@ -7,14 +7,9 @@ and follower/serving integration."""
 
 from __future__ import annotations
 
-import pytest
-
-# r15 heavy lane: snapshot-store integration (234 s) on the r15 sandbox — runs with
-# SPARK_GRAFT_TEST_LANE=full (or -m heavy); see tests/conftest.py.
-pytestmark = pytest.mark.heavy
-
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from helium_etl_lite_spark.etl import fixtures
@@ -32,6 +27,10 @@ def _df(spark, blocks, v=None):
     )
 
 
+# Heavy lane (SPARK_GRAFT_TEST_LANE=full, or -m heavy; see tests/conftest.py):
+# snapshot-store integration. The follower and streaming sink contract
+# (atomic matches plain, one manifest swap per micro-batch) runs by default.
+@pytest.mark.heavy
 class TestCommitProtocol:
     def test_two_commits_merge(self, spark, tmp_path):
         root = str(tmp_path / "s1")
@@ -188,6 +187,7 @@ class TestFollowerAtomic:
         m = SnapshotStore(atomic_dir).current()
         assert m["height"] == 1059 and m["first_block"] == 1000
 
+    @pytest.mark.heavy
     def test_follower_atomic_incremental_batches(self, spark, tmp_path):
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
         out_dir = str(tmp_path / "inc")
@@ -207,6 +207,7 @@ class TestFollowerAtomic:
         expected = build_outputs("rewards", blocks, txns)["rewards"].count()
         assert got.count() == expected
 
+    @pytest.mark.heavy
     def test_serving_views_read_snapshot(self, spark, tmp_path):
         from helium_etl_lite_spark import serving
 
@@ -257,6 +258,7 @@ class TestStreamingAtomic:
         assert txns_out is not None and txns_out.count() > 0
 
 
+@pytest.mark.heavy
 def test_time_travel_old_version_stable_until_vacuum(spark, tmp_path):
     import pyspark.sql.functions as F
 
@@ -287,6 +289,7 @@ def test_time_travel_old_version_stable_until_vacuum(spark, tmp_path):
     assert read_snapshot(spark, root, "t", version=1) is None
 
 
+@pytest.mark.heavy
 def test_publish_detects_concurrent_writer_and_tolerates_replay(spark, tmp_path):
     import pyspark.sql.functions as F
     import pytest as _pytest
@@ -318,6 +321,7 @@ def test_publish_detects_concurrent_writer_and_tolerates_replay(spark, tmp_path)
     assert read_snapshot(spark, root, "t").count() == 5
 
 
+@pytest.mark.heavy
 def test_publish_recovers_orphan_manifest_beyond_current(spark, tmp_path):
     # Crash window: manifest N linked but CURRENT never written, and the
     # replayed commit carries DIFFERENT content (tip advanced). The
@@ -360,6 +364,7 @@ def test_publish_recovers_orphan_manifest_beyond_current(spark, tmp_path):
     assert read_snapshot(spark, root, "t").count() == 12
 
 
+@pytest.mark.heavy
 def test_publish_young_conflicting_claim_raises_not_clobbers(spark, tmp_path):
     # The r6 ADVICE TOCTOU: writer A links manifest N but has not yet
     # swapped CURRENT when writer B (same N, different content) arrives.
@@ -404,6 +409,7 @@ def test_publish_young_conflicting_claim_raises_not_clobbers(spark, tmp_path):
     assert store.current()["height"] == 77
 
 
+@pytest.mark.heavy
 def test_read_changes_prunes_unchanged_partitions(spark, tmp_path):
     # CDC is metadata-first: v1 lands 5 block_ranges, v2 churns only
     # range 0 — the diff must read ONLY range-0 files (inputFiles), and
@@ -433,6 +439,7 @@ def test_read_changes_prunes_unchanged_partitions(spark, tmp_path):
     assert files and all("block_range=0" in f for f in files), files
 
 
+@pytest.mark.heavy
 def test_read_changes_empty_and_error_cases(spark, tmp_path):
     import pyspark.sql.functions as F
     import pytest as _pytest
@@ -468,6 +475,7 @@ def test_read_changes_empty_and_error_cases(spark, tmp_path):
         read_changes(spark, root, "t", 2, 1)
 
 
+@pytest.mark.heavy
 def test_publish_replay_of_old_version_never_rolls_current_back(spark, tmp_path):
     # Review find: an identical-content replay of manifest N arriving
     # AFTER the store advanced to N+1 must be a no-op — not rewind
@@ -495,6 +503,7 @@ def test_publish_replay_of_old_version_never_rolls_current_back(spark, tmp_path)
     assert read_snapshot(spark, root, "t").count() == 15
 
 
+@pytest.mark.heavy
 def test_compaction_produces_empty_change_feed(spark, tmp_path):
     # Maintenance must be invisible to CDC consumers: compact rewrites
     # partitions into a NEW snapshot version with identical logical
@@ -533,6 +542,7 @@ def test_compaction_produces_empty_change_feed(spark, tmp_path):
     assert feed.count() == 0
 
 
+@pytest.mark.heavy
 def test_keyed_feed_pairs_updates_and_apply_reproduces_v2(spark, tmp_path):
     # r9 verdict item 5: with key_cols, an in-place change emits
     # update_preimage/update_postimage; pure inserts/deletes keep their
@@ -617,6 +627,7 @@ def test_keyed_feed_pairs_updates_and_apply_reproduces_v2(spark, tmp_path):
         read_changes(spark, root, "t", 1, 2, key_cols=["nope"])
 
 
+@pytest.mark.heavy
 def test_keyed_feed_pairs_null_keys(spark, tmp_path):
     # review find: a NULL-keyed in-place change must pair as an update
     # (null-safe joins), not fall through as insert+delete.
