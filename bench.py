@@ -13,14 +13,18 @@ serialize to the driver.
 
 Variance discipline (r4 verdict item 1): BENCH totals swung ±30%
 across rounds with unchanged code because best-of-2 doesn't reach JVM
-steady state — whole-stage-codegen classes only hit C2 tier after
-several executions (measured: join_multiway_star 3.47 → 1.90 → 1.85 →
-1.32 → 1.26 → 1.21 s over six runs). Each query now runs N_RUNS=5
-times; the reported number is the min (the reproducible steady-state
-cost a resident engine pays), and the JSON carries every run plus a
-spread so a real regression is distinguishable from host noise:
-spread_pct = (median - min) / min — high spread means the host was
-loaded and the min is the trustworthy number.
+steady state (measured: join_multiway_star 3.47 → 1.90 → 1.85 → 1.32
+→ 1.26 → 1.21 s over six runs). The cause was codegen cache thrash, not
+slow C2 tier-up: the headline plans generate more whole-stage classes
+than Spark's default 100-entry cache holds, so runs kept recompiling
+them with Janino and the JIT kept re-compiling the new classes.
+`get_spark` now sizes the cache for the engine's working set
+(session.py). Each query runs N_RUNS=5 times; the reported number is
+the min (the reproducible steady-state cost a resident engine pays),
+and the JSON carries every run plus a spread so a real regression is
+distinguishable from host noise: spread_pct = (median - min) / min —
+high spread means the host was loaded and the min is the trustworthy
+number.
 
 `value` stays the sum over the SAME 12-query headline set benched
 since r3 (named in "headline") so round-over-round totals compare;
@@ -62,6 +66,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from helium_etl_lite_spark import registry
 from helium_etl_lite_spark.session import get_spark
+from helium_etl_lite_spark.tables import TABLE_NAMES, load_table
 
 HEADLINE = [
     "scan_predicate_pushdown",
@@ -384,7 +389,7 @@ def _wait_for_idle():
                 f"# idle gate TIMED OUT after {waited:.0f}s (loadavg "
                 f"still {load1:.2f}/{load5:.2f}/{load15:.2f}, cpu probe "
                 f"{probe:.3f}s vs {PROBE_THRESHOLD_SEC}); "
-                "proceeding degraded",
+                "proceeding (gate_timeout; degraded if the probe is slow)",
                 file=sys.stderr,
             )
             return round(waited, 1), True, round(probe, 3)
@@ -398,6 +403,33 @@ def _wait_for_idle():
         time.sleep(poll)
 
 
+def run_flags(idle_timeout, probe_sec, load1_start, midrun_load, headline_total, outliers):
+    """The run-quality flags of the record.
+
+    `gate_timeout`: the bounded idle wait gave up (any of its signals
+    stayed above threshold). `degraded`: the measurement itself is
+    suspect — the gate gave up with the CPU probe still slow (the direct
+    measure of contention; a calm probe means only loadavg, which cannot
+    tell a draining 15-min average from live load, held the gate), load
+    was present at session start, the headline total is STILL
+    record-breaking slow with a recorded mid-run breach after the one
+    allowed rerun (r12 verdict item 2), or a per-query outlier survived
+    the rerun (r13 verdict item 2 — the point is then
+    honest-but-contaminated, never silently official)."""
+    return {
+        "gate_timeout": bool(idle_timeout),
+        "degraded": bool(
+            (idle_timeout and probe_sec >= PROBE_THRESHOLD_SEC)
+            or load1_start > IDLE_LOAD_THRESHOLD
+            or (
+                any(v > IDLE_LOAD_THRESHOLD for v in midrun_load.values())
+                and headline_total > RERUN_FACTOR * HEADLINE_RECORD_SEC
+            )
+            or bool(outliers)
+        ),
+    }
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     idle_wait, idle_timeout, probe_sec = _wait_for_idle()
@@ -407,11 +439,8 @@ def main():
         load0 = os.getloadavg()
         # warm the JVM + parquet footers of every input so per-query
         # times measure the query, not session startup / first-touch IO.
-        for table in (
-            "region nation customer supplier part orders lineitem "
-            "events documents embeddings"
-        ).split():
-            spark.read.parquet(f"{sf_dir}/{table}.parquet").count()
+        for table in TABLE_NAMES:
+            load_table(spark, sf_dir, table).count()
 
         timings: dict[str, float] = {}
         spreads: dict[str, float] = {}
@@ -568,24 +597,11 @@ def main():
             "spread_pct": spreads,
             "loadavg_start": [round(x, 2) for x in load0],
             "loadavg_end": [round(x, 2) for x in os.getloadavg()],
-            # degraded fires when the bounded idle wait gave up, load was
-            # present at session start, the headline total is STILL
-            # record-breaking slow with a recorded mid-run breach after
-            # the one allowed rerun (r12 verdict item 2), or a per-query
-            # outlier survived the rerun (r13 verdict item 2 — the point
-            # is then honest-but-contaminated, never silently official).
-            "degraded": bool(
-                idle_timeout
-                or load0[0] > IDLE_LOAD_THRESHOLD
-                or (
-                    any(v > IDLE_LOAD_THRESHOLD for v in midrun_load.values())
-                    and sum(timings[q] for q in HEADLINE)
-                    > RERUN_FACTOR * HEADLINE_RECORD_SEC
-                )
-                or bool(outliers_final)
+            **run_flags(
+                idle_timeout, probe_sec, load0[0], midrun_load,
+                sum(timings[q] for q in HEADLINE), outliers_final,
             ),
             "idle_wait_sec": idle_wait,
-            "idle_wait_timeout": idle_timeout,
             "cpu_probe_sec": probe_sec,
             "load_before_pass": load_before_pass,
             "midrun_load": midrun_load,
@@ -620,10 +636,10 @@ def main():
             out["scale_max_ratio"] = max(ratios.values()) if ratios else None
         # Loadavg gate (r10 verdict item 7, strengthened per r11 item
         # 2): the idle gate above waits for loadavg < 2 before the
-        # session starts, so degraded should normally be false now —
-        # it stays ALWAYS-PRESENT (not just when true) so the series
-        # records that the gate ran, and fires only when the bounded
-        # wait timed out or load arrived after the gate passed.
+        # session starts, so both flags should normally be false now —
+        # they stay ALWAYS-PRESENT (not just when true) so the series
+        # records that the gate ran (see run_flags for what each means).
+        out["gate_timeout"] = detail["gate_timeout"]
         out["degraded"] = detail["degraded"]
         out["idle_wait_sec"] = idle_wait
         out["cpu_probe_sec"] = probe_sec
